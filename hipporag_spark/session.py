@@ -4,18 +4,84 @@ Local mode stands in for a multi-executor cluster in this sandbox; all
 partitioning decisions below are made as if each of the N threads were a
 separate executor (no reliance on shared driver memory beyond broadcast
 variables, no ``collect()`` of large data).
+
+The driver heap (``spark.driver.memory``) defaults to half of the memory
+this process may use: the smaller of the host's physical RAM and the memory
+cgroup limit, rounded down to whole GiB, at least ``1g``. The other half is
+left for what the heap cap does not cover: JVM overhead above the heap, the
+Python workers ``local[p]`` forks, and the shuffle/spill dirs this module
+puts on ``/dev/shm`` (tmpfs, charged to the same RAM). A heap cap above the
+usable memory lets G1 grow the heap until the kernel's OOM killer takes the
+JVM. ``SPARK_GRAFT_DRIVER_MEM`` overrides the default and is passed to Spark
+as given; a value larger than the usable memory is logged as a warning.
 """
 
 from __future__ import annotations
 
+import logging
 import os
+import re
 import tempfile
 
 from pyspark.sql import SparkSession
 
 
+log = logging.getLogger(__name__)
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+_CGROUP_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",  # cgroup v2
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",  # cgroup v1
+)
+
+
+def usable_memory_bytes() -> int:
+    """Memory this process may use: the smaller of physical RAM and the
+    memory cgroup limit, where one is set ("max" or v1's near-2^63 sentinel
+    both lose the min)."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in _CGROUP_LIMIT_FILES:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limit = min(limit, int(raw))
+    return limit
+
+
+_UNIT_SHIFT = {"": 20, "b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _memory_string_bytes(value: str) -> int | None:
+    """Bytes in a Spark memory string ("7g", "512m", "2048" = MiB, Spark's
+    default unit for ``spark.driver.memory``); None if it does not parse."""
+    m = re.fullmatch(r"(\d+)\s*([bkmgtp]?)b?", value.strip().lower())
+    return int(m.group(1)) << _UNIT_SHIFT[m.group(2)] if m else None
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for :func:`get_spark`: ``SPARK_GRAFT_DRIVER_MEM``
+    as given (warning when it exceeds the usable memory), else half of the
+    usable memory in whole GiB, at least ``1g``."""
+    usable = usable_memory_bytes()
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        requested = _memory_string_bytes(explicit)
+        if requested is not None and requested > usable:
+            log.warning(
+                "SPARK_GRAFT_DRIVER_MEM=%s exceeds the %.1f GiB of memory this "
+                "process may use; the JVM may be OOM-killed once its heap grows",
+                explicit,
+                usable / 2**30,
+            )
+        return explicit
+    return f"{max(1, (usable // 2) >> 30)}g"
 
 
 # RAM-backed shuffle dirs are only safe while tmpfs has real headroom: a
@@ -70,7 +136,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # small inputs arrive as one file = one partition; without a lower
