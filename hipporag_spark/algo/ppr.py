@@ -15,14 +15,19 @@ damping default 0.5 ``config_utils.py:180-183``):
 Three physical engines, same math, chosen by where the data fits:
 
 - ``engine="csr"`` (default): the packed block engine
-  (:mod:`..graph.blocked`). A superstep is ONE Spark job of two cogrouped
-  stages — per-block SpMV with in-block dst pre-aggregation (the src block
-  is the salt of a two-phase aggregate, so hub skew never concentrates on
-  one task), then a per-block combine that applies reset/teleport and
-  computes L1 delta + dangling mass + per-partition metrics in the same
-  pass. State is O(P) packed rows, not O(V) scalar rows: round-1 profiling
-  showed the row-per-vertex formulation spent ~2.5 s/superstep on
-  scheduling + Arrow overhead and ANTI-scaled with cores. Works at any
+  (:mod:`..graph.blocked`). A superstep is a per-block SpMV with in-block
+  dst pre-aggregation (the src block is the salt of a two-phase
+  aggregate, so hub skew never concentrates on one task), then a
+  per-block combine that applies reset/teleport and computes L1 delta +
+  dangling mass + per-partition metrics in the same pass. A chunk of C
+  chained supersteps is ONE Spark job of C+1 pandas stages: an SpMV
+  stage, C-1 stages that each run block b's combine and then block b's
+  next SpMV in one Python call, and a final combine stage — one Python
+  crossing per superstep, since each such stage costs ~0.4 s of fixed
+  scheduling and Arrow overhead on a 4-core host even when it does no
+  work. State is O(P) packed rows, not O(V) scalar rows: round-1
+  profiling showed the row-per-vertex formulation spent ~2.5 s/superstep
+  on scheduling + Arrow overhead and ANTI-scaled with cores. Works at any
   graph size; per-task memory is bounded by block size.
 - ``engine="broadcast"`` (batch): when the graph's COO arrays fit in
   executor memory (the HippoRAG retrieval regime — millions of vertices,
@@ -274,103 +279,6 @@ def _make_spmv_kernel(damping: float, nq: int, spill_dir: str, fanout_labels: li
     return kernel
 
 
-def _make_spmv_super_kernel(
-    damping: float, nq: int, spill_dir: str, fanout_labels: list[int]
-):
-    """Stage-1 kernel over a SUPERBLOCK of C co-grouped src blocks — the
-    map-side combine of the partial-rank shuffle. Each task runs the
-    per-member SpMV exactly as :func:`_make_spmv_kernel`, then MERGES
-    the members' partials per dst block (sparse union of the uniq index
-    sets, float64 scatter-add in pinned member order) before anything
-    is serialized: the kind=1 values crossing the wire shrink ~C×, and
-    the kind=2 dangling fan-out shrinks from P×P to (P/C)×P rows.
-    kind=0 rank forwards are per MEMBER (the combine's delta needs each
-    block's own old vector) and unchanged.
-
-    Per-task memory is bounded by the superblock's own edge volume (the
-    merge is sparse — entries, never dst-block sizes), i.e. C× the
-    single-block bound: C is the knob trading task granularity against
-    wire volume, data-derived so both cluster sizes run the identical
-    plan."""
-
-    def kernel(r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(r_pdf) == 0:
-            return _EMPTY_PARTIALS
-        rows: list[tuple] = []
-        member_order = np.argsort(r_pdf["block"].to_numpy(), kind="stable")
-        acc: dict[int, list] = {}
-        dmass_total = np.zeros(nq)
-        sb = None
-        for mi in member_order:
-            blk = int(r_pdf["block"].iloc[int(mi)])
-            if sb is None:
-                sb = blk  # min member label = the group's deterministic tag
-            v_flat = np.asarray(r_pdf["vals"].iloc[int(mi)], dtype=np.float64)
-            rows.append((blk, 0, blk, None, v_flat.astype(np.float32)))
-            dang = _load_dang(spill_dir, blk)
-            if len(dang):
-                dmass_total += (
-                    v_flat.reshape(nq, -1)[:, np.asarray(dang, dtype=np.int64)]
-                    .sum(axis=1)
-                )
-            g = _load_block(spill_dir, blk)
-            if g is None:
-                continue
-            V = v_flat.reshape(nq, -1)
-            dblks, eoff, uoff = g["dblks"], g["eoff"], g["uoff"]
-            max_e = int(np.diff(eoff).max()) if len(dblks) else 0
-            ebuf = _scratch((spill_dir, "spmv_e"), (max(1, max_e),))
-            for j in range(len(dblks)):
-                a, b = int(eoff[j]), int(eoff[j + 1])
-                ua, ub = int(uoff[j]), int(uoff[j + 1])
-                nu = ub - ua
-                src_idx = np.asarray(g["src_idx"][a:b], dtype=np.int64)
-                w = np.asarray(g["w"][a:b])
-                inv = np.asarray(g["inv"][a:b], dtype=np.int64)
-                eb = ebuf[: b - a]
-                # keyed by (member, dst-index): stable shape across
-                # supersteps, never collides within the task (unlike the
-                # single-block kernel's j-keyed buffers), so the merge can
-                # read it after the member loop without a copy
-                sums = _scratch((spill_dir, "super_sums", blk, j), (nq, nu))
-                for q in range(nq):
-                    np.take(V[q], src_idx, out=eb)
-                    np.multiply(eb, w, out=eb)
-                    sums[q] = np.bincount(inv, weights=eb, minlength=nu)
-                sums *= damping
-                acc.setdefault(int(dblks[j]), []).append(
-                    (np.asarray(g["uniq"][ua:ub], dtype=np.int64), sums)
-                )
-        for dblk in sorted(acc):
-            parts = acc[dblk]
-            if len(parts) == 1:
-                uniq, merged = parts[0]
-            else:
-                cat = np.concatenate([u for u, _ in parts])
-                uniq, invc = np.unique(cat, return_inverse=True)
-                merged = _scratch(
-                    (spill_dir, "super_merge", sb, dblk), (nq, len(uniq))
-                )
-                merged.fill(0.0)
-                off = 0
-                for u, s in parts:
-                    merged[:, invc[off : off + len(u)]] += s
-                    off += len(u)
-            rows.append(
-                (
-                    int(dblk), 1, int(sb),
-                    uniq.astype(np.int32),
-                    merged.ravel().astype(np.float32),
-                )
-            )
-        dm32 = dmass_total.astype(np.float32)
-        for lbl in fanout_labels:
-            rows.append((lbl, 2, int(sb), None, dm32))
-        return pd.DataFrame(rows, columns=["dblk", "kind", "src", "idx", "vals"])
-
-    return kernel
-
-
 def _make_combine_kernel(damping: float, nq: int, uniform_mask: np.ndarray, n: int):
     """Stage-2 kernel: per dst-block combine over ALL queries at once.
     base_q = (1-d) + d·Σ_blocks dmass_q (from the kind=2 partial rows);
@@ -425,6 +333,20 @@ def _make_combine_kernel(damping: float, nq: int, uniform_mask: np.ndarray, n: i
         return pd.DataFrame(
             [(blk, new.ravel(), delta, dmass, mass, n_b)], columns=cols
         )
+
+    return kernel
+
+
+def _make_combine_then_spmv_kernel(combine, spmv):
+    """Interior-superstep kernel: block b's combine, then block b's SpMV of
+    the NEXT superstep on the new rank row, in one Python call. The rank
+    row never crosses the Arrow boundary between the two, so a chunk of C
+    supersteps runs C+1 pandas stages instead of 2C. The combine's metrics
+    are dropped — interior supersteps record none (see ``_ppr_blocked``) —
+    and the arithmetic is exactly the two kernels run back to back."""
+
+    def kernel(p_pdf: pd.DataFrame, rs_pdf: pd.DataFrame) -> pd.DataFrame:
+        return spmv(combine(p_pdf, rs_pdf)[["block", "vals"]])
 
     return kernel
 
@@ -535,7 +457,11 @@ def _ppr_blocked(
     the SpMV, summed in the combine), so interior supersteps need no
     driver action at all — the chunk's single action materializes the
     final packed vectors executor-side and pulls only the per-block metric
-    arrays (O(P·Q) scalars). Convergence is therefore detected at chunk
+    arrays (O(P·Q) scalars). A chunk of C supersteps is C+1 pandas stages
+    (SpMV, C-1 × combine-then-SpMV, combine; P == 1: C fused stages), so
+    interior supersteps also keep no metrics of their own; the chunk
+    boundary always holds plain ``(block, vals)`` ranks, the unit the
+    durable checkpoint writes. Convergence is therefore detected at chunk
     granularity (a converged run does ≤ check_every-1 extra supersteps,
     which only tightens the fixed point). With ``checkpoint_dir`` the same
     cadence is the durable-checkpoint cadence, default every superstep
@@ -558,39 +484,12 @@ def _ppr_blocked(
     # same dataflow, one extra (tiny) stage, no driver barrier either way
     fanout = P <= _K2_FANOUT_MAX
     all_labels = bg.fanout_labels()
-    # map-side combine: group C src blocks per SpMV task (the superblock
-    # kernel merges their partials before the exchange — serialized kind=1
-    # values ÷C, kind=2 fan-out rows ÷C). Default: C=4 only when the
-    # grouped stage still FILLS the cluster (P/C ≥ parallelism) —
-    # measured −20% wall where stages wave-average, but a 4-task stage
-    # on 32 cores DOUBLED the 16-block sf0.1 wall (under-parallelized
-    # SpMV). At 10^12 edges P/C ≫ cores everywhere and the guard is
-    # always satisfied. SPARK_GRAFT_SPMV_GROUP overrides (the scaling
-    # ratio benches pin 1 for wave-averaged like-for-like). Superblock
-    # labels reuse the routed label set: any SUBSET of a pmod-bijection
-    # keeps pairwise-distinct shuffle placement, so labels[b // C] lands
-    # the P/C groups on P/C distinct partitions of the P-scoped shuffle.
-    dp = spark.sparkContext.defaultParallelism
-    spmv_group = int(os.environ.get("SPARK_GRAFT_SPMV_GROUP", "0")) or (
-        4 if P >= 16 and P // 4 >= dp else 1
-    )
-    sb_map = None
-    if spmv_group > 1:
-        keys = [all_labels[b] for b in range(P)]
-        vals = [all_labels[b // spmv_group] for b in range(P)]
-        sb_map = F.map_from_arrays(
-            F.array(*[F.lit(int(k)) for k in keys]),
-            F.array(*[F.lit(int(v)) for v in vals]),
-        )
-    # non-fanout emits ONE kind=2 row per src group; its dblk value is
+    # non-fanout emits ONE kind=2 row per src block; its dblk value is
     # discarded (filtered on kind==2 and re-fanned via the JVM aggregate)
     k2_labels = all_labels if fanout else all_labels[:1]
-    spmv = (
-        _make_spmv_super_kernel(damping, nq, bg.spill_dir, k2_labels)
-        if spmv_group > 1
-        else _make_spmv_kernel(damping, nq, bg.spill_dir, k2_labels)
-    )
+    spmv = _make_spmv_kernel(damping, nq, bg.spill_dir, k2_labels)
     combine = _make_combine_kernel(damping, nq, uniform_mask, n)
+    combine_then_spmv = _make_combine_then_spmv_kernel(combine, spmv)
     fused = (
         _make_fused_kernel(damping, nq, bg.spill_dir, uniform_mask, n)
         if P == 1
@@ -623,60 +522,71 @@ def _ppr_blocked(
             start_step = latest + 1
     ranks = ranks.localCheckpoint(eager=True)
 
-    def one_superstep(cur: DataFrame) -> DataFrame:
-        if fused is not None:
-            return (
-                cur.groupby("block")
-                .cogroup(runstate.groupby("block"))
-                .applyInPandas(fused, _OUT_SCHEMA)
-            )
-        if sb_map is not None:
-            partials = (
-                cur.withColumn("sblk", F.element_at(sb_map, F.col("block")))
-                .groupby("sblk")
-                .applyInPandas(spmv, _PARTIAL_SCHEMA)
-            )
-        else:
-            partials = cur.groupby("block").applyInPandas(spmv, _PARTIAL_SCHEMA)
-        if not fanout:
-            k2 = partials.filter(F.col("kind") == 2)
-            dm = (
-                k2.select(F.posexplode("vals").alias("qi", "v"))
-                .groupBy("qi")
-                .agg(F.sum("v").alias("v"))
-            )
-            arr = dm.agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("qi", "v"))),
-                    lambda s: s["v"],
-                ).alias("vals")
-            )
-            bcast_rows = (
-                bg.vstate.select(F.col("block").alias("dblk"))
-                .crossJoin(F.broadcast(arr))
-                .select(
-                    "dblk",
-                    F.lit(2).alias("kind"),
-                    F.lit(-1).alias("src"),
-                    F.lit(None).cast("array<int>").alias("idx"),
-                    # the JVM aggregate sums in double; narrow to the
-                    # float32 wire type for the union with the partials
-                    F.col("vals").cast("array<float>").alias("vals"),
-                )
-            )
-            partials = partials.filter(F.col("kind") != 2).unionByName(bcast_rows)
-        return (
-            partials.groupby("dblk")
-            .cogroup(runstate.groupby("block"))
-            .applyInPandas(combine, _OUT_SCHEMA)
+    def route(partials: DataFrame) -> DataFrame:
+        """SpMV output → combine input. With fan-out the kind=2 rows are
+        already addressed to every dst block; otherwise their global sum
+        is computed JVM-side and broadcast back out as one row per block."""
+        if fanout:
+            return partials
+        k2 = partials.filter(F.col("kind") == 2)
+        dm = (
+            k2.select(F.posexplode("vals").alias("qi", "v"))
+            .groupBy("qi")
+            .agg(F.sum("v").alias("v"))
         )
+        arr = dm.agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("qi", "v"))),
+                lambda s: s["v"],
+            ).alias("vals")
+        )
+        bcast_rows = (
+            bg.vstate.select(F.col("block").alias("dblk"))
+            .crossJoin(F.broadcast(arr))
+            .select(
+                "dblk",
+                F.lit(2).alias("kind"),
+                F.lit(-1).alias("src"),
+                F.lit(None).cast("array<int>").alias("idx"),
+                # the JVM aggregate sums in double; narrow to the
+                # float32 wire type for the union with the partials
+                F.col("vals").cast("array<float>").alias("vals"),
+            )
+        )
+        return partials.filter(F.col("kind") != 2).unionByName(bcast_rows)
+
+    def with_runstate(df: DataFrame, key: str, kernel, schema: str) -> DataFrame:
+        return (
+            df.groupby(key)
+            .cogroup(runstate.groupby("block"))
+            .applyInPandas(kernel, schema)
+        )
+
+    def supersteps(cur: DataFrame, count: int) -> DataFrame:
+        """``count`` chained supersteps from packed ranks ``cur`` to the
+        combine's ``_OUT_SCHEMA`` rows: one SpMV stage, count-1
+        combine-then-SpMV stages, one final combine — count+1 pandas
+        stages (P == 1: ``count`` fused stages)."""
+        if fused is not None:
+            out = with_runstate(cur, "block", fused, _OUT_SCHEMA)
+            for _ in range(count - 1):
+                out = with_runstate(
+                    out.select("block", "vals"), "block", fused, _OUT_SCHEMA
+                )
+            return out
+        partials = route(cur.groupby("block").applyInPandas(spmv, _PARTIAL_SCHEMA))
+        for _ in range(count - 1):
+            partials = route(
+                with_runstate(partials, "dblk", combine_then_spmv, _PARTIAL_SCHEMA)
+            )
+        return with_runstate(partials, "dblk", combine, _OUT_SCHEMA)
 
     converged = False
     # scope shuffle partitions to the block count for the superstep loop:
     # every exchange here keys on block/dblk (≤ P distinct values), so the
     # session-wide setting (= core count) schedules (cores − P) provably
-    # EMPTY tasks per stage — 8 stages per chained job. At sf0.1 (P=1) that
-    # was 31 empty tasks × 8 stages × 5 jobs of pure scheduling latency.
+    # EMPTY tasks per stage of every chained job. At sf0.1 (P=1) that was
+    # 31 empty tasks × 8 stages × 5 jobs of pure scheduling latency.
     # On a cluster P ≫ cores and this is a no-op.
     old_sp = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(P))
@@ -692,10 +602,7 @@ def _ppr_blocked(
         while step < max_iter and not converged:
             t0 = time.time()
             chunk = min(chunk_size, max_iter - step)
-            out = one_superstep(ranks)
-            for _ in range(chunk - 1):
-                out = one_superstep(out.select("block", "vals"))
-            out = out.localCheckpoint(eager=False)
+            out = supersteps(ranks, chunk).localCheckpoint(eager=False)
             # the chunk's ONE action
             mrows = out.select("block", "delta", "dmass", "mass", "nrows").collect()
 

@@ -329,10 +329,17 @@ class LinkGraphEngine:
             staged = staged.unionByName(
                 synonymy_edges(entity_store, num_blocks=self.num_blocks or 8)
             )
-        verts = vertices(extraction).persist()
-        edges = resolve_edges(staged, verts).persist()
-        adj = adjacency(edges).persist()
-        st = strength(adj).persist()
+        # the graph tables are truncated eagerly like _merge_state's: every
+        # algorithm starts from adj/strength, and on their full lineage
+        # (a plan of thousands of lines, mostly broadcast joins) each
+        # action re-analyzes it — triangle_count ran ~4x slower. The
+        # embedding stores stay lazily persisted, so a build does no extra
+        # work for them.
+        ck = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
+        verts = ck(vertices(extraction))
+        edges = ck(resolve_edges(staged, verts))
+        adj = ck(adjacency(edges))
+        st = ck(strength(adj))
 
         # entity → #chunks inverted index (only the cardinality is used:
         # HippoRAG.py:1463-1464 / SURVEY.md §1.3)

@@ -151,18 +151,6 @@ class Cluster:
             SPARK_GRAFT_EDGES_PER_BLOCK=os.environ.get(
                 "SPARK_GRAFT_EDGES_PER_BLOCK", "250000"
             ),
-            # ratio benches pin the wave-averaged regime: the superblock
-            # combine (engine default C=4) collapses stage 1 to P/C tasks,
-            # which at 8 one-core executors is a single max-task-gated
-            # wave — it improves ABSOLUTE walls at both levels (measured:
-            # 2-exec 121→109 s, 8-exec 44.5→43.9 s) but flatters the
-            # 2-exec denominator more, so the N→4N ratio stops measuring
-            # the engine. Same rationale as the EDGES_PER_BLOCK pin above;
-            # at 10^12 edges P/C ≫ cores at every level and the
-            # distinction vanishes.
-            SPARK_GRAFT_SPMV_GROUP=os.environ.get(
-                "SPARK_GRAFT_SPMV_GROUP", "1"
-            ),
             OPENBLAS_NUM_THREADS="1",
             OMP_NUM_THREADS="1",
             MKL_NUM_THREADS="1",

@@ -65,11 +65,6 @@ WORKLOADS = {
         # input, while ABSOLUTE throughput moves the other way (1M-edge
         # blocks are 1.85× faster; see blocked_shuffle_bigblocks).
         "SPARK_GRAFT_EDGES_PER_BLOCK": "250000",
-        # …and the r5 superblock combine (engine default C=4) collapses
-        # stage 1 to P/C tasks — the same wave artifact by another knob;
-        # pinned off here for the same reason (absolute walls IMPROVE
-        # with it at both levels: BENCH/local_pair_r5b.jsonl)
-        "SPARK_GRAFT_SPMV_GROUP": "1",
     },
     "blocked_shuffle_bigblocks": {
         # the absolute-throughput operating point (default 1M-edge blocks,

@@ -232,30 +232,55 @@ def test_blocked_ppr_restores_shuffle_partitions(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == before_aqe
 
 
-def test_blocked_ppr_superblock_combine_matches_reference(spark, monkeypatch):
-    """The map-side superblock combine (SPARK_GRAFT_SPMV_GROUP > 1): C
-    src blocks per SpMV task, partials merged before the exchange — the
-    result must still match the reference within the usual bound, at
-    several (P, C) shapes including C ∤ P."""
-    from hipporag_spark.algo.ppr import personalized_pagerank
-
-    n, m, seed = 60, 400, 11
+def test_blocked_ppr_fused_interior_steps_bitwise(spark):
+    """A chunk of C supersteps runs its C-1 interior steps as
+    combine-then-SpMV stages; check_every=1 runs none. Over a fixed number
+    of supersteps (tol=0) both must give bit-identical ranks, and the
+    converged run still meets the oracle."""
+    n, m, seed = 60, 300, 5
     edges = random_multigraph(n, m, seed)
     adj, st, vids = make_graph(spark, n, edges)
     reset = np.zeros(n)
-    reset[3], reset[17] = 0.7, 0.3
-    reset_df = spark.createDataFrame([(3, 0.7), (17, 0.3)], "id long, weight double")
-    want = ppr_reference(n, edges, reset, 0.5)
-    for P, C in ((6, 3), (8, 4), (5, 2)):
-        monkeypatch.setenv("SPARK_GRAFT_SPMV_GROUP", str(C))
+    reset[2], reset[41] = 0.6, 0.4
+    reset_df = spark.createDataFrame([(2, 0.6), (41, 0.4)], "id long, weight double")
+
+    def run(**kw):
         ranks, lineage = personalized_pagerank(
             spark, adj, st, vids, n_vertices=n, reset_df=reset_df,
-            damping=0.5, engine="csr", num_blocks=P,
+            damping=0.5, engine="csr", num_blocks=4, **kw,
         )
-        got = spark_ranks_to_np(ranks, n)
-        assert np.allclose(got, want, atol=1e-6), (P, C)
-        assert lineage[-1]["converged"]
-    monkeypatch.delenv("SPARK_GRAFT_SPMV_GROUP")
+        return spark_ranks_to_np(ranks, n), lineage
+
+    step1, lin1 = run(tol=0.0, max_iter=8, check_every=1)
+    chunked, lin4 = run(tol=0.0, max_iter=8, check_every=4)
+    assert len(lin1) == len(lin4) == 8 and not lin4[-1]["converged"]
+    assert np.array_equal(chunked, step1)
+    got, lineage = run(tol=1e-6)
+    assert lineage[-1]["converged"]
+    assert np.allclose(got, ppr_reference(n, edges, reset, 0.5), atol=1e-6)
+
+
+def test_triangle_count_keeps_only_its_result_cached(spark):
+    """Repeated triangle_count calls must leave no persisted RDD behind
+    beyond the returned frame's own (each call used to leave its cached
+    closed-wedge table)."""
+    from hipporag_spark.lifecycle import free_local_checkpoint
+
+    edges = random_multigraph(40, 200, 17)
+    adj, _, _ = make_graph(spark, 40, edges)
+    jsc = spark.sparkContext._jsc
+    per_vertex, want = triangle_count(adj)  # also fills adj's own cache
+    rows = sorted(per_vertex.collect())
+    free_local_checkpoint(per_vertex)
+    base = jsc.getPersistentRDDs().size()
+    for _ in range(2):
+        per_vertex, total = triangle_count(adj)
+        assert total == want
+        assert jsc.getPersistentRDDs().size() <= base + 1
+        assert sorted(per_vertex.collect()) == rows
+        free_local_checkpoint(per_vertex)
+        # <=, not ==: the session's cleaner may free older tests' RDDs
+        assert jsc.getPersistentRDDs().size() <= base
 
 
 def test_kcore_matches_networkx(spark):
