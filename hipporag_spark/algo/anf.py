@@ -194,6 +194,8 @@ def effective_diameter(nf_rows: list[tuple], q: float = 0.9) -> float:
     the smallest (fractional) h with N(h) ≥ q·N(final), linearly
     interpolated between integer hops (the standard ANF convention)."""
     pts = sorted((r[0], r[2]) for r in nf_rows)
+    if pts[0][1] >= q:  # met at the first point: nothing to interpolate from
+        return float(pts[0][0])
     for (h0, f0), (h1, f1) in zip(pts, pts[1:]):
         if f1 >= q:
             if f1 == f0:

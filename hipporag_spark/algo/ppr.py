@@ -1044,6 +1044,120 @@ def _collect_coo_executor(
     return out
 
 
+def _reset_vector(n: int, ids, rid: np.ndarray, wt: np.ndarray) -> np.ndarray:
+    """One query's reset vector over the COO's index space: NaN/negative
+    weights → 0 (``HippoRAG.py:1598``), normalized to Σ=1, uniform when
+    nothing is left (SimpleGraph.kt:139-140). ``ids`` (sorted vertex ids,
+    or None for a dense id space) maps vertex ids to positions; repeated
+    ids accumulate."""
+    wt = np.where(np.isnan(wt) | (wt < 0), 0.0, wt)
+    if ids is not None:
+        rid = np.searchsorted(ids, rid)
+    tot = wt.sum()
+    reset = np.zeros(n)
+    if tot > 0:
+        np.add.at(reset, rid, wt / tot)
+    else:
+        reset[:] = 1.0 / n
+    return reset
+
+
+def _iterate_lockstep(g: dict, resets: list[np.ndarray], d: float, tol: float, max_iter: int):
+    """Power iterations of several queries over one resolved COO (``g``
+    from :func:`_resolve_coo`) → ``(ranks, iters, deltas, converged)``,
+    one entry per reset vector.
+
+    All queries iterate in LOCKSTEP so each edge chunk (the dominant DRAM
+    stream) is read once per iteration and reused from cache for every
+    query — per-query traffic shrinks by the queries-per-task factor;
+    converged queries drop out individually."""
+    parts_layout = g.get("layout") == "parts"
+    n, dang = g["n"], g["dang"]
+    w_const, inv_s = g["w_const"], g["inv_strength"]
+    uniq_dst, rel_seg = g["uniq_dst"], g["rel_seg"]
+    mdir = g.get("mmap_dir")
+    if parts_layout:
+        src = w = None
+        chunk_part = g["chunk_part"]
+        chunk_elo, chunk_ehi = g["chunk_elo"], g["chunk_ehi"]
+        chunk_slo, chunk_shi = g["chunk_slo"], g["chunk_shi"]
+        n_chunks = len(chunk_part)
+        max_chunk = (
+            int((np.asarray(chunk_ehi) - np.asarray(chunk_elo)).max())
+            if n_chunks
+            else 0
+        )
+        has_edges = n_chunks > 0
+        weighted = w_const is None
+    else:
+        src, w = g["src"], g["w"]
+        edge_lo, seg_lo = g["edge_lo"], g["seg_lo"]
+        n_chunks = len(edge_lo) - 1
+        max_chunk = int(np.diff(edge_lo).max()) if n_chunks else 0
+        has_edges = len(src) > 0
+        weighted = w is not None
+    # preallocated per-call buffer (chunk-sized, L2-resident): fresh
+    # full-size temporaries per iteration both churn the page allocator
+    # and quadruple DRAM traffic
+    ebuf = np.empty(max(1, max_chunk), dtype=np.float64)
+    rrbuf = np.empty(n, dtype=np.float64)
+    T = len(resets)
+    Rs = [np.full(n, 1.0 / n) for _ in range(T)]
+    Ns = [np.empty(n) for _ in range(T)]
+    SEG = np.empty((T, max(1, len(uniq_dst))), dtype=np.float64)
+    iters = [0] * T
+    deltas = [0.0] * T
+    convs = [False] * T
+    active = list(range(T))
+    while active:
+        for t in active:
+            dm = Rs[t][dang].sum() if len(dang) else 0.0
+            np.multiply(resets[t], (1.0 - d) + d * dm, out=Ns[t])
+        if has_edges:
+            # gather from rr = r/strength (V-sized, cache-resident);
+            # edges sorted by dst → per-dst segment sums sequential;
+            # the rr[src] gather is the only random memory stream
+            RRs = {}
+            for t in active:
+                np.multiply(Rs[t], inv_s, out=rrbuf)
+                RRs[t] = rrbuf.copy() if len(active) > 1 else rrbuf
+            for ci in range(n_chunks):
+                if parts_layout:
+                    psrc, pw = _load_part(mdir, chunk_part[ci])
+                    elo, ehi = chunk_elo[ci], chunk_ehi[ci]
+                    slo, shi = chunk_slo[ci], chunk_shi[ci]
+                    sc = psrc[elo:ehi]
+                    wc = pw[elo:ehi] if pw is not None else None
+                else:
+                    elo, ehi = edge_lo[ci], edge_lo[ci + 1]
+                    slo, shi = seg_lo[ci], seg_lo[ci + 1]
+                    sc = src[elo:ehi]
+                    wc = w[elo:ehi] if w is not None else None
+                eb = ebuf[: ehi - elo]
+                for t in active:
+                    np.take(RRs[t], sc, out=eb)
+                    if wc is not None:
+                        np.multiply(eb, wc, out=eb)
+                    np.add.reduceat(eb, rel_seg[slo:shi], out=SEG[t, slo:shi])
+            scale = d if weighted else d * w_const
+            for t in active:
+                seg_t = SEG[t]
+                seg_t *= scale
+                Ns[t][uniq_dst] += seg_t
+        still = []
+        for t in active:
+            delta = float(np.abs(Ns[t] - Rs[t]).sum())
+            Rs[t], Ns[t] = Ns[t], Rs[t]
+            iters[t] += 1
+            deltas[t] = delta
+            if delta < tol:
+                convs[t] = True
+            elif iters[t] < max_iter:
+                still.append(t)
+        active = still
+    return Rs, iters, deltas, convs
+
+
 def _ppr_broadcast_batch(
     spark: SparkSession,
     graph_coo,
@@ -1074,112 +1188,20 @@ def _ppr_broadcast_batch(
         if not pdfs:
             return
         g = _resolve_coo(bc.value)
-        parts_layout = g.get("layout") == "parts"
-        n, dang = g["n"], g["dang"]
-        w_const, inv_s = g["w_const"], g["inv_strength"]
-        uniq_dst, rel_seg = g["uniq_dst"], g["rel_seg"]
-        mdir = g.get("mmap_dir")
-        if parts_layout:
-            src = w = None
-            chunk_part = g["chunk_part"]
-            chunk_elo, chunk_ehi = g["chunk_elo"], g["chunk_ehi"]
-            chunk_slo, chunk_shi = g["chunk_slo"], g["chunk_shi"]
-            n_chunks = len(chunk_part)
-            max_chunk = (
-                int((np.asarray(chunk_ehi) - np.asarray(chunk_elo)).max())
-                if n_chunks
-                else 0
-            )
-            has_edges = n_chunks > 0
-            weighted = w_const is None
-        else:
-            src, w = g["src"], g["w"]
-            edge_lo, seg_lo = g["edge_lo"], g["seg_lo"]
-            n_chunks = len(edge_lo) - 1
-            max_chunk = int(np.diff(edge_lo).max()) if n_chunks else 0
-            has_edges = len(src) > 0
-            weighted = w is not None
         ids = g["ids"]
         pdf = pd.concat(pdfs, ignore_index=True)
-        # preallocated per-task buffer (chunk-sized, L2-resident): fresh
-        # full-size temporaries per iteration both churn the page allocator
-        # and quadruple DRAM traffic
-        ebuf = np.empty(max(1, max_chunk), dtype=np.float64)
-        rrbuf = np.empty(n, dtype=np.float64)
-        # all queries of this task iterate in LOCKSTEP so each edge chunk
-        # (the dominant DRAM stream) is read once per iteration and reused
-        # from cache for every query — per-query traffic shrinks by the
-        # queries-per-task factor; converged queries drop out individually
+        # all queries of this task share one lockstep iteration
         groups = list(pdf.groupby("query_id", sort=True))
         qlist = [q for q, _ in groups]
-        T = len(qlist)
-        resets, Rs, Ns = [], [], []
-        for _, grp in groups:
-            wt = grp["weight"].to_numpy(dtype=np.float64)
-            wt = np.where(np.isnan(wt) | (wt < 0), 0.0, wt)
-            rid = grp["id"].to_numpy(dtype=np.int64)
-            if ids is not None:
-                rid = np.searchsorted(ids, rid)
-            tot = wt.sum()
-            reset = np.zeros(n)
-            if tot > 0:
-                np.add.at(reset, rid, wt / tot)
-            else:
-                reset[:] = 1.0 / n
-            resets.append(reset)
-            Rs.append(np.full(n, 1.0 / n))
-            Ns.append(np.empty(n))
-        SEG = np.empty((T, max(1, len(uniq_dst))), dtype=np.float64)
-        iters = [0] * T
-        deltas = [0.0] * T
-        convs = [False] * T
-        active = list(range(T))
-        while active:
-            for t in active:
-                dm = Rs[t][dang].sum() if len(dang) else 0.0
-                np.multiply(resets[t], (1.0 - d) + d * dm, out=Ns[t])
-            if has_edges:
-                # gather from rr = r/strength (V-sized, cache-resident);
-                # edges sorted by dst → per-dst segment sums sequential;
-                # the rr[src] gather is the only random memory stream
-                RRs = {}
-                for t in active:
-                    np.multiply(Rs[t], inv_s, out=rrbuf)
-                    RRs[t] = rrbuf.copy() if len(active) > 1 else rrbuf
-                for ci in range(n_chunks):
-                    if parts_layout:
-                        psrc, pw = _load_part(mdir, chunk_part[ci])
-                        elo, ehi = chunk_elo[ci], chunk_ehi[ci]
-                        slo, shi = chunk_slo[ci], chunk_shi[ci]
-                        sc = psrc[elo:ehi]
-                        wc = pw[elo:ehi] if pw is not None else None
-                    else:
-                        elo, ehi = edge_lo[ci], edge_lo[ci + 1]
-                        slo, shi = seg_lo[ci], seg_lo[ci + 1]
-                        sc = src[elo:ehi]
-                        wc = w[elo:ehi] if w is not None else None
-                    eb = ebuf[: ehi - elo]
-                    for t in active:
-                        np.take(RRs[t], sc, out=eb)
-                        if wc is not None:
-                            np.multiply(eb, wc, out=eb)
-                        np.add.reduceat(eb, rel_seg[slo:shi], out=SEG[t, slo:shi])
-                scale = d if weighted else d * w_const
-                for t in active:
-                    seg_t = SEG[t]
-                    seg_t *= scale
-                    Ns[t][uniq_dst] += seg_t
-            still = []
-            for t in active:
-                delta = float(np.abs(Ns[t] - Rs[t]).sum())
-                Rs[t], Ns[t] = Ns[t], Rs[t]
-                iters[t] += 1
-                deltas[t] = delta
-                if delta < tol:
-                    convs[t] = True
-                elif iters[t] < max_iter:
-                    still.append(t)
-            active = still
+        resets = [
+            _reset_vector(
+                g["n"], ids,
+                grp["id"].to_numpy(dtype=np.int64),
+                grp["weight"].to_numpy(dtype=np.float64),
+            )
+            for _, grp in groups
+        ]
+        Rs, iters, deltas, convs = _iterate_lockstep(g, resets, d, tol, max_iter)
         for t, q in enumerate(qlist):
             r = Rs[t]
             nz = np.nonzero(r)[0]

@@ -95,6 +95,7 @@ class LinkGraphEngine:
         self.state: GraphState | None = None
         self._block_graph = None  # compiled once per state, reused by every retrieve
         self._graph_coo_bc = None  # broadcast COO, collected once per state
+        self._snapshot_bc = None  # broadcast retrieval snapshot, built once per state
 
     def graph_coo(self):
         """The broadcast graph-COO for the current state, collected and
@@ -111,7 +112,23 @@ class LinkGraphEngine:
             self._graph_coo_bc = self.spark.sparkContext.broadcast(coo)
         return self._graph_coo_bc
 
+    def retrieval_snapshot(self):
+        """The broadcast retrieval snapshot (:mod:`.retrieval.snapshot`) for
+        the current state: built lazily by the first broadcast-regime
+        retrieve(), never by index()/delete(), and dropped with the COO."""
+        from .retrieval.snapshot import build_snapshot
+
+        assert self.state is not None, "index() first"
+        if self._snapshot_bc is None:
+            snap = build_snapshot(self.state, self.fact_table())
+            self._snapshot_bc = self.spark.sparkContext.broadcast(snap)
+        return self._snapshot_bc
+
     def _drop_graph_coo(self) -> None:
+        """Drop the per-state broadcasts: the COO and the retrieval snapshot."""
+        if self._snapshot_bc is not None:
+            self._snapshot_bc.unpersist()
+            self._snapshot_bc = None
         if self._graph_coo_bc is not None:
             mdir = self._graph_coo_bc.value.get("mmap_dir")
             self._graph_coo_bc.unpersist()
@@ -666,33 +683,74 @@ class LinkGraphEngine:
         """Multi-query PPR retrieval → ``(query_id, chunk_id, score, rank)``.
 
         Queries are embedded driver-side (same deterministic encoder as the
-        stores), scored against fact + passage stores in one batched pass;
-        the top facts pass through the pluggable recognition-memory rerank
-        (``HippoRAG.py:1522-1570``); queries left with ZERO facts fall back
-        to pure DPR ranking exactly like the reference
-        (``HippoRAG.py:417-419``). Fact-bearing queries run batched PPR:
-        the broadcast-graph engine when the graph fits executor memory (the
-        HippoRAG retrieval regime), else the packed block engine over the
-        BlockGraph compiled once per GraphState (never per retrieve).
-        """
-        from .algo.ppr import personalized_pagerank_batch
-        from .retrieval.rerank import rerank_facts
+        stores) with the two task instructions, scored against the fact and
+        passage stores; the top facts pass through the pluggable
+        recognition-memory rerank (``HippoRAG.py:1522-1570``); queries left
+        with ZERO facts fall back to pure DPR ranking exactly like the
+        reference (``HippoRAG.py:417-419``); the rest run PPR. Repeated
+        queries are answered once.
 
+        Two regimes, same rankings:
+
+        - broadcast (``engine`` "auto" with ``n_edges <=
+          BROADCAST_EDGE_LIMIT``, or "broadcast"; no ``checkpoint_dir``):
+          ONE ``mapInPandas`` job over the query rows does every step per
+          query from the :meth:`retrieval_snapshot` and the
+          :meth:`graph_coo` (:mod:`.retrieval.snapshot`). ``rerank_filter``
+          then runs inside the task, so like any UDF closure it must be
+          picklable to the executors (a function from a module they cannot
+          import is not). The result is a local DataFrame: it runs no
+          further job and stays valid after later index()/delete() calls.
+        - otherwise the DataFrame chain of :mod:`.retrieval.scoring` builds
+          the resets and batched PPR runs on the packed block engine over
+          the BlockGraph compiled once per GraphState (never per retrieve).
+        """
         from .retrieval.embeddings import QUERY_TO_FACT, QUERY_TO_PASSAGE
 
         s = self.state
         assert s is not None, "index() first"
+        queries = list(dict.fromkeys(queries))
         # dual query embeddings: fact scoring and DPR use DIFFERENT task
         # instructions (HippoRAG.py:1254-1288, prompts/linking.py:1-10)
-        fact_scores = score_store(
-            s.fact_store, self._query_embeddings(queries, QUERY_TO_FACT)
+        fact_q = self._query_embeddings(queries, QUERY_TO_FACT)
+        dpr_q = self._query_embeddings(queries, QUERY_TO_PASSAGE)
+        if engine == "auto":
+            # graph COO fits comfortably in executor/driver memory → the
+            # query-partitioned broadcast engine; beyond that, packed blocks
+            engine = (
+                "broadcast"
+                if s.n_edges <= BROADCAST_EDGE_LIMIT and checkpoint_dir is None
+                else "csr"
+            )
+        if engine == "broadcast" and checkpoint_dir is None:
+            from .retrieval.snapshot import RESULT_SCHEMA, make_retrieve_kernel, query_rows
+
+            kernel = make_retrieve_kernel(
+                self.retrieval_snapshot(), self.graph_coo(), link_top_k,
+                retrieval_top_k, damping, rerank_filter,
+            )
+            rows = query_rows(self.spark, fact_q, dpr_q).mapInPandas(kernel, RESULT_SCHEMA)
+            return self.spark.createDataFrame(rows.toPandas(), RESULT_SCHEMA)
+        return self._retrieve_dataframe(
+            queries, fact_q, dpr_q, link_top_k, retrieval_top_k, damping,
+            checkpoint_dir, engine, rerank_filter,
         )
+
+    def _retrieve_dataframe(
+        self, queries, fact_q, dpr_q, link_top_k, retrieval_top_k, damping,
+        checkpoint_dir, engine, rerank_filter,
+    ) -> DataFrame:
+        """retrieve() as a DataFrame lineage: the scoring chain builds the
+        resets, :func:`personalized_pagerank_batch` ranks them."""
+        from .algo.ppr import personalized_pagerank_batch
+        from .retrieval.rerank import rerank_facts
+
+        s = self.state
+        fact_scores = score_store(s.fact_store, fact_q)
         tf = top_facts(fact_scores, link_top_k)
         if rerank_filter is not None:
             tf = rerank_facts(tf, rerank_filter)
-        dpr = score_store(
-            s.chunk_store, self._query_embeddings(queries, QUERY_TO_PASSAGE)
-        ).persist()
+        dpr = score_store(s.chunk_store, dpr_q).persist()
         # ≤ Q rows: which queries still have facts after rerank
         with_facts = {r["query_id"] for r in tf.select("query_id").distinct().collect()}
         factless = {q for q in queries if q not in with_facts}
@@ -704,14 +762,6 @@ class LinkGraphEngine:
             if factless:
                 resets = resets.filter(~F.col("query_id").isin(list(factless)))
             resets = resets.persist()
-            if engine == "auto":
-                # graph COO fits comfortably in executor/driver memory → the
-                # query-partitioned broadcast engine; beyond that, packed blocks
-                engine = (
-                    "broadcast"
-                    if s.n_edges <= BROADCAST_EDGE_LIMIT and checkpoint_dir is None
-                    else "csr"
-                )
             ranks, _ = personalized_pagerank_batch(
                 self.spark,
                 s.adj,
@@ -721,7 +771,6 @@ class LinkGraphEngine:
                 n_vertices=s.n_vertices,
                 damping=damping,
                 graph=self.block_graph() if engine == "csr" else None,
-                graph_coo=self.graph_coo() if engine == "broadcast" else None,
                 checkpoint_dir=checkpoint_dir,
                 run_id=None,
                 engine=engine,

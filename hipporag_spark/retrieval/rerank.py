@@ -11,6 +11,8 @@ that return mutated strings.
 ``DeterministicFilter`` (default) keeps facts whose score clears a
 threshold — deterministic, dependency-free. Any callable
 ``list[str] -> list[str]`` (e.g. a real LLM client) plugs in unchanged.
+In the broadcast retrieval regime the engine calls the filter inside the
+retrieve task (:mod:`.snapshot`), so it must pickle to the executors.
 """
 
 from __future__ import annotations

@@ -14,6 +14,15 @@ Reference pipeline (``/root/reference/src/hipporag/HippoRAG.py:363-449``):
 All steps are DataFrame ops; query embedding is a broadcast literal array.
 Multi-query batching: every function takes/propagates a ``query_id`` column
 so Q queries run as ONE lineage (the reference loops per query).
+
+Which path runs: ``LinkGraphEngine.retrieve`` uses this chain only in the
+csr/checkpointed regime (graphs above ``BROADCAST_EDGE_LIMIT``, a
+``checkpoint_dir``, or an explicit non-broadcast ``engine``). In the
+broadcast regime it runs :mod:`.snapshot`'s fused kernel instead: the same
+steps, bitwise the same scores and tie-breaks, in one Spark job, with the
+``rerank_filter`` running inside the task (so it must be picklable). These
+functions stay public: they are the reference the fused path is tested
+against.
 """
 
 from __future__ import annotations

@@ -68,7 +68,7 @@ def main() -> None:
         "block",
         F.array_repeat(F.lit(1.0 / V), (F.size("ids") * nq).cast("int")).alias("vals"),
     ).localCheckpoint()
-    spmv = _make_spmv_kernel(0.5, nq, bg.spill_dir, P)
+    spmv = _make_spmv_kernel(0.5, nq, bg.spill_dir, bg.fanout_labels())
     partials = ranks.groupby("block").applyInPandas(spmv, _PARTIAL_SCHEMA)
     for tag in ("warm", "timed"):
         t0 = time.time()

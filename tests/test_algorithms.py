@@ -1428,6 +1428,14 @@ def test_anf_tracks_true_neighborhood_function(spark):
     assert sorted(map(tuple, nf2.collect())) == sorted(map(tuple, nf.collect()))
 
 
+def test_effective_diameter_met_at_first_point():
+    """A curve already at q at its first hop has that hop as its effective
+    diameter; interpolating below the first point went negative."""
+    from hipporag_spark.algo.anf import effective_diameter
+
+    assert effective_diameter([(0, 5.0, 0.95), (1, 5.0, 1.0)]) == 0.0
+
+
 def test_maximal_matching_equals_sequential_greedy(spark):
     """Locally-dominant rounds with a pinned total order compute EXACTLY
     the sequential greedy matching in ascending (md5-32(a|b), a, b)

@@ -96,12 +96,12 @@ def cluster(tmp_path_factory):
         ],
         stdout=open(mlog, "w"), stderr=subprocess.STDOUT, env=env,
     )
-    procs = [master]
+    # tests may replace a worker in this list; teardown kills what it holds
+    info["workers"] = []
     try:
         _wait_for(mlog, f"Starting Spark master at {master_url}")
-        workers = [_start_worker(info, "a"), _start_worker(info, "b")]
-        procs += workers
-        info["workers"] = workers
+        for tag in ("a", "b"):
+            info["workers"].append(_start_worker(info, tag))
 
         zpath = os.path.join(base, "hipporag_spark.zip")
         pkg = os.path.join(REPO, "hipporag_spark")
@@ -114,6 +114,7 @@ def cluster(tmp_path_factory):
         info["zip"] = zpath
         yield info
     finally:
+        procs = [master] + info["workers"]
         for p in procs:
             try:
                 p.send_signal(signal.SIGKILL)
