@@ -8,24 +8,27 @@ family (:mod:`.mis`).
 Algorithm (Jones–Plassmann 1993, bulk-synchronous): an uncolored vertex
 colors itself in the round when every HIGHER-priority uncolored
 neighbor is already colored, taking the minimum color unused by its
-colored neighbors (first-fit / mex). Two deterministic priorities:
+colored neighbors (first-fit / mex). Three deterministic priorities, all
+DuckDB-replayable through the same md5 hash ``h`` = the first 8 md5 hex
+chars of the decimal id as a 32-bit int:
 
-- ``priority="hash"`` (default, the scale mode): priority order is
-  ``(h(id), id)`` ascending with ``h`` = the first 8 md5 hex chars of
-  the decimal id as a 32-bit int. A hash order is a uniformly random —
-  but PINNED and replayable (DuckDB computes the identical md5) —
-  permutation, so the longest decreasing-priority path, which equals
-  the round count, is the longest descending run of a random sequence
-  along a graph path: expected **O(log n)** rounds (Jones–Plassmann's
-  own analysis) instead of the longest decreasing-ID path, which grows
-  with the graph (measured 34 rounds for 35k vertices at sf0.1 —
-  round-count scaling with V is exactly what cannot ship at 10^12).
+- ``priority="ldf"`` (default, the scale mode): largest degree first,
+  ties by ``(h(id), id)`` ascending. A decreasing-priority path must
+  descend through degree classes, which caps the wavefront depth on
+  hub-heavy graphs (measured on the sf0.1 repo graph, 35k vertices:
+  4 rounds, 3 colors).
+- ``priority="hash"``: ``(h(id), id)`` ascending, a pinned pseudo-random
+  permutation. Jones–Plassmann's analysis gives expected O(log n) rounds
+  on bounded-degree graphs, but hub-heavy graphs keep long descending
+  chains (53 rounds on the same graph).
 - ``priority="id"``: smaller id first — the result is EXACTLY the
   sequential greedy first-fit coloring in ascending id order (the
   sequential-equivalence oracle mode, SURVEY.md §7.3), at the cost of
-  path-length round counts.
+  path-length round counts (34 rounds on the same graph).
 
-Both give a proper Δ+1-bounded coloring, partitioning-independent.
+All three give a proper Δ+1-bounded coloring, partitioning-independent.
+The priority is recorded in every checkpoint manifest, so a resume with
+a different priority is refused.
 
 Scale shape per round: one anti-join (ready = uncolored with no
 uncolored higher-priority neighbor), one join against colored neighbors
@@ -39,15 +42,11 @@ convergence check. Non-fixpoint exhaustion raises (the scc.py lesson).
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def _prio32(c):
@@ -124,30 +123,12 @@ def greedy_coloring(
     if vertex_ids is not None:
         verts = vertex_ids.select("id").distinct()
 
-    # state: colored(id, color) grows; uncolored shrinks
-    colored = spark.createDataFrame([], "id long, color long")
-    uncolored = verts
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            colored, manifest = ckpt.load(spark, latest)
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return colored, lineage
-            uncolored = verts.join(colored.select("id"), "id", "left_anti")
-            start = latest + 1
-    colored = colored.persist()
-    uncolored = uncolored.persist()
     n_verts = verts.count()
-
     deg = nbrs.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
 
-    for step in range(start, max_iter):
-        t0 = time.time()
+    # state: colored(id, color) grows; the uncolored rest is derived per round
+    def step(colored: DataFrame, k: int) -> Superstep:
+        uncolored = verts.join(colored.select("id"), "id", "left_anti").persist()
         # ready: uncolored with NO uncolored higher-priority neighbor
         # (edge flag `prec` = src precedes dst, precomputed once).
         # no distinct: left_anti tolerates duplicate blocker rows, and
@@ -189,49 +170,20 @@ def greedy_coloring(
         # one action per round: the per-block size of the colored set
         # materializes the lazy checkpoint AND yields the convergence
         # verdict (remaining = n_verts − colored, n_verts counted once)
-        stats = (
-            new_colored.withColumn("block", block_of(F.col("id"), P))
-            .groupBy("block")
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        )
-        n_colored = int(sum(r["rows"] for r in stats))
-        remaining = n_verts - n_colored
-        converged = remaining == 0
-        wall_ms = (time.time() - t0) * 1000
-
-        old_colored, old_uncolored = colored, uncolored
-        if ckpt is not None:
-            meta = SuperstepCheckpoint(
-                run_id=ckpt.run_id, superstep=step, delta=float(remaining),
-                converged=converged, wall_ms=wall_ms,
-                partitions=[{"block": r["block"], "rows": r["rows"]} for r in stats],
-                extra={"algorithm": "greedy_coloring", "n_colored": n_colored},
-            )
-            colored = ckpt.write(new_colored, meta)
-            free_local_checkpoint(new_colored)
-        else:
-            colored = new_colored
-        uncolored = verts.join(colored.select("id"), "id", "left_anti").persist()
-        old_colored.unpersist()
-        old_uncolored.unpersist()
-        free_local_checkpoint(old_colored)
-        lineage.append(
-            {"run_id": ckpt.run_id if ckpt else "in-memory", "superstep": step,
-             "n_colored": n_colored, "remaining": remaining,
-             "converged": converged, "wall_ms": wall_ms}
-        )
-        if converged:
-            break
-    else:
-        nbrs.unpersist()
+        stats = block_stats(new_colored, P)
         uncolored.unpersist()
-        colored.unpersist()
-        free_local_checkpoint(colored)
+        n_colored = sum(r["rows"] for r in stats)
+        return Superstep(new_colored, stats, n_verts - n_colored, {"n_colored": n_colored})
+
+    colored, lineage, converged = supersteps.run(
+        spark, spark.createDataFrame([], "id long, color long"), step,
+        algorithm="greedy_coloring", metric="remaining", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id, params={"priority": priority},
+    )
+    nbrs.unpersist()
+    if not converged:
+        supersteps.release(colored)
         raise RuntimeError(
             f"greedy_coloring did not finish within max_iter={max_iter} rounds"
         )
-
-    nbrs.unpersist()
-    uncolored.unpersist()
     return colored.select("id", "color"), lineage

@@ -8,9 +8,9 @@ at any parallelism (no float ties; SURVEY.md §7.3).
 
 Each superstep is one join + one min-aggregate; converged when zero labels
 changed (the change-count is the same single action that yields per-block
-metrics). Supersteps checkpoint through the same CheckpointManager contract
-as PPR. Plain min-propagation needs O(diameter) rounds; linkgraph/social
-graphs have tiny diameters, and the passage↔entity bipartite KG here has
+metrics). Supersteps checkpoint and resume through :mod:`..supersteps`.
+Plain min-propagation needs O(diameter) rounds; linkgraph/social graphs
+have tiny diameters, and the passage↔entity bipartite KG here has
 diameter ≤ ~2·(chunk chain length). For adversarial long-chain inputs,
 ``pointer_jump=True`` adds a label-shortcutting round
 (``label ← label(label)``) that halves path lengths (Stergiou-style
@@ -19,16 +19,11 @@ shortcutting), giving O(log d) convergence.
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..fsio import STATS_RESET_EVERY, truncate_stats
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def connected_components(
@@ -50,23 +45,7 @@ def connected_components(
     # scale where the state no longer broadcasts)
     edges = adj.select("src", "dst").repartition(F.col("src")).persist()
 
-    labels = vertex_ids.select("id", F.col("id").alias("component"))
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            labels, manifest = ckpt.load(spark, latest)
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return labels, lineage
-            start = latest + 1
-    labels = labels.persist()
-
-    for step in range(start, max_iter):
-        t0 = time.time()
+    def step(labels: DataFrame, k: int) -> Superstep:
         # neighbor-min: adj join labels on src, min per dst
         nbr_min = (
             edges.join(labels, edges.src == labels.id)
@@ -92,54 +71,19 @@ def connected_components(
         # Spark action (the eager-checkpoint + separate-metrics version ran
         # two, re-executing the plan)
         new_labels = new_labels.localCheckpoint(eager=False)
-
-        stats = (
+        stats = block_stats(
             labels.select("id", F.col("component").alias("old"))
-            .join(new_labels.select("id", F.col("component").alias("new")), "id")
-            .withColumn("block", block_of(F.col("id"), P))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum((F.col("old") != F.col("new")).cast("long")).alias("changed"),
-            )
-            .collect()
+            .join(new_labels.select("id", F.col("component").alias("new")), "id"),
+            P,
+            changed=F.sum((F.col("old") != F.col("new")).cast("long")),
         )
-        changed = int(sum(r["changed"] for r in stats))
-        wall_ms = (time.time() - t0) * 1000
-        converged = changed == 0
+        return Superstep(new_labels, stats, sum(r["changed"] for r in stats))
 
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=float(changed),
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["rows"], "changed": r["changed"]} for r in stats
-            ],
-            extra={"algorithm": "connected_components"},
-        )
-        old = labels
-        if ckpt is not None:
-            labels = ckpt.write(new_labels, meta)  # parquet-backed copy
-            free_local_checkpoint(new_labels)
-        else:
-            labels = new_labels
-            if not converged and (step + 1) % STATS_RESET_EVERY == 0:
-                # periodic stat reset: localCheckpoint carries the plan's
-                # estimated sizeInBytes forward, and this superstep joins
-                # the state leaf 4× — unbounded rounds otherwise compound
-                # the estimate's digits exponentially (see fsio.truncate_stats)
-                labels = truncate_stats(new_labels, "hipporag_cc_state_")
-                free_local_checkpoint(new_labels)
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "changed": changed,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-
+    labels, lineage, _ = supersteps.run(
+        spark, vertex_ids.select("id", F.col("id").alias("component")), step,
+        algorithm="connected_components", metric="changed", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id,
+        params={"pointer_jump": pointer_jump},
+    )
     edges.unpersist()
     return labels, lineage

@@ -28,15 +28,11 @@ depth (small on power-law graphs), and the monotone cap
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def coreness(
@@ -69,22 +65,8 @@ def coreness(
             .join(state, "id", "left_outer")
             .select("id", F.coalesce(F.col("val"), F.lit(0).cast("long")).alias("val"))
         )
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            state, manifest = ckpt.load(spark, latest)
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return state.select("id", F.col("val").alias("coreness")), lineage
-            start = latest + 1
-    state = state.persist()
 
-    for step in range(start, max_iter):
-        t0 = time.time()
+    def step(state: DataFrame, k: int) -> Superstep:
         nb = edges.join(
             state.select(F.col("id").alias("dst"), "val"), "dst"
         ).select(F.col("src").alias("id"), "val")
@@ -94,6 +76,8 @@ def coreness(
             .groupBy("id")
             .agg(F.max(F.least(F.col("rn").cast("long"), F.col("val"))).alias("h"))
         )
+        # the state carries this round's changed flag (like sssp's
+        # `improved`), so the checkpoint is the frame the next round reads
         new_state = (
             state.join(h, "id", "left_outer")
             .select(
@@ -106,55 +90,20 @@ def coreness(
             )
             .localCheckpoint(eager=False)
         )
+        stats = block_stats(
+            new_state, P, changed=F.sum(F.col("changed_flag").cast("long"))
+        )
+        return Superstep(new_state, stats, sum(r["changed"] for r in stats))
 
-        stats = (
-            new_state.withColumn("block", block_of(F.col("id"), P))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("changed_flag").cast("long")).alias("changed"),
-            )
-            .collect()
-        )
-        changed = int(sum(r["changed"] for r in stats))
-        wall_ms = (time.time() - t0) * 1000
-        converged = changed == 0
-
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=float(changed),
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["rows"], "changed": r["changed"]}
-                for r in stats
-            ],
-            extra={"algorithm": "coreness"},
-        )
-        old = state
-        new_state = new_state.drop("changed_flag")
-        if ckpt is not None:
-            state = ckpt.write(new_state, meta)
-            free_local_checkpoint(new_state)
-        else:
-            state = new_state
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "changed": changed,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-    else:
-        edges.unpersist()
-        state.unpersist()
-        free_local_checkpoint(state)
+    state, lineage, converged = supersteps.run(
+        spark, state, step,
+        algorithm="coreness", metric="changed", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id,
+    )
+    edges.unpersist()
+    if not converged:
+        supersteps.release(state)
         raise RuntimeError(
             f"coreness did not reach fixpoint within max_iter={max_iter} rounds"
         )
-
-    out = state.select("id", F.col("val").alias("coreness"))
-    edges.unpersist()
-    return out, lineage
+    return state.select("id", F.col("val").alias("coreness")), lineage

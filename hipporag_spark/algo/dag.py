@@ -21,20 +21,16 @@ Scale shape per round: one frontier-to-edges equi-join against the
 (static, persisted, src-pre-partitioned) edge list + one
 map-side-combinable max agg + one full_outer state merge keyed on id;
 convergence read from the same O(P) metrics action that materializes the
-round. Supersteps checkpoint through the CheckpointManager contract.
+round. Supersteps checkpoint and resume through :mod:`..supersteps`.
 """
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def longest_path_layers(
@@ -59,25 +55,8 @@ def longest_path_layers(
         .unionAll(e.select(F.col("dst").alias("id")))
         .distinct()
     )
-    state = verts.select(
-        "id", F.lit(0).cast("long").alias("layer"), F.lit(True).alias("grew")
-    )
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            state, manifest = ckpt.load(spark, latest)
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return state.select("id", "layer"), lineage
-            start = latest + 1
-    state = state.persist()
 
-    for step in range(start, max_iter):
-        t0 = time.time()
+    def step(state: DataFrame, k: int) -> Superstep:
         frontier = state.filter("grew").select("id", "layer")
         cand = (
             e.join(frontier, e.src == frontier.id)
@@ -97,54 +76,21 @@ def longest_path_layers(
             )
             .localCheckpoint(eager=False)
         )
+        stats = block_stats(new_state, P, changed=F.sum(F.col("grew").cast("long")))
+        return Superstep(new_state, stats, sum(r["changed"] for r in stats))
 
-        stats = (
-            new_state.withColumn("block", block_of(F.col("id"), P))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("grew").cast("long")).alias("changed"),
-            )
-            .collect()
-        )
-        changed = int(sum(r["changed"] for r in stats))
-        wall_ms = (time.time() - t0) * 1000
-        converged = changed == 0
-
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=float(changed),
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["rows"], "changed": r["changed"]}
-                for r in stats
-            ],
-            extra={"algorithm": "longest_path_layers"},
-        )
-        old = state
-        if ckpt is not None:
-            state = ckpt.write(new_state, meta)
-            free_local_checkpoint(new_state)
-        else:
-            state = new_state
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "changed": changed,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-    else:
-        e.unpersist()
+    state, lineage, converged = supersteps.run(
+        spark,
+        verts.select("id", F.lit(0).cast("long").alias("layer"), F.lit(True).alias("grew")),
+        step,
+        algorithm="longest_path_layers", metric="changed", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id,
+    )
+    e.unpersist()
+    if not converged:
         raise RuntimeError(
             f"longest_path_layers did not converge within max_iter={max_iter}: "
             "the graph contains a cycle reachable from a source, or its "
             "longest path exceeds max_iter"
         )
-
-    out = state.select("id", "layer")
-    e.unpersist()
-    return out, lineage
+    return state.select("id", "layer"), lineage

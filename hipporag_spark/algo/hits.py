@@ -47,22 +47,18 @@ Representation choices, and one measured Spark pathology they dodge:
 
 Convergence: L1 delta of the normalized hub vector < ``tol`` (NetworkX's
 criterion); ``tol=0`` forces exactly ``max_iter`` rounds (what the
-fixed-round unrolled-CTE oracle needs). Supersteps checkpoint through the
-same CheckpointManager contract as PPR/CC/SSSP (raw state + norms in the
-manifest), so a killed job resumes mid-iteration.
+fixed-round unrolled-CTE oracle needs). Supersteps checkpoint and resume
+through :mod:`..supersteps` (raw state + norms in the manifest), so a
+killed job resumes mid-iteration.
 """
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def hits(
@@ -89,30 +85,16 @@ def hits(
     adj_dst = adj.repartition(F.col("dst")).persist()
 
     # raw (unnormalized) state + its L1 norms as driver scalars; scale
-    # invariance makes init all-ones ≡ init 1/n after the first rescale
-    state = vertex_ids.select(
-        "id", F.lit(1.0).alias("authority"), F.lit(1.0).alias("hub")
-    )
-    na = nh = 1.0
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            state, manifest = ckpt.load(spark, latest)
-            # CheckpointManager flattens `extra` into the manifest
-            na = float(manifest.get("norm_auth", 1.0))
-            nh = float(manifest.get("norm_hub", 1.0))
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return _normalized(state, na, nh), lineage
-            start = latest + 1
-    state = state.persist()
+    # invariance makes init all-ones ≡ init 1/n after the first rescale.
+    # The norms travel in the manifest, so a resumed run restores them.
+    norms = {"norm_auth": 1.0, "norm_hub": 1.0}
 
-    for step in range(start, max_iter):
-        t0 = time.time()
+    def restore_norms(manifest: dict) -> None:
+        for key in norms:
+            norms[key] = float(manifest.get(key, 1.0))
+
+    def step(state: DataFrame, k: int) -> Superstep:
+        nh = norms["norm_hub"]
         # The previous state is read normalized via LITERAL norms — no
         # cross joins, no state self-joins (see module docstring); the
         # state leaf joins only the fixed pre-partitioned adj leaves, and
@@ -159,15 +141,8 @@ def hits(
 
         # action 1: per-block metrics + the new norms; materializes the
         # lazy checkpoint in the same job
-        stats = (
-            new_state.withColumn("block", block_of(F.col("id"), P))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum("authority").alias("sum_auth"),
-                F.sum("hub").alias("sum_hub"),
-            )
-            .collect()
+        stats = block_stats(
+            new_state, P, sum_auth=F.sum("authority"), sum_hub=F.sum("hub")
         )
         new_na = float(sum(r["sum_auth"] for r in stats)) or 1.0
         new_nh = float(sum(r["sum_hub"] for r in stats)) or 1.0
@@ -183,40 +158,20 @@ def hits(
             .agg(F.sum(F.abs(F.col("new") - F.col("old"))).alias("d"))
             .collect()[0]["d"]
         )
-        wall_ms = (time.time() - t0) * 1000
-        converged = delta < tol
+        norms.update(norm_auth=new_na, norm_hub=new_nh)
+        return Superstep(new_state, stats, delta, dict(norms))
 
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=delta,
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["rows"], "sum_hub": r["sum_hub"]}
-                for r in stats
-            ],
-            extra={"algorithm": "hits", "norm_auth": new_na, "norm_hub": new_nh},
-        )
-        old = state
-        if ckpt is not None:
-            state = ckpt.write(new_state, meta)
-            free_local_checkpoint(new_state)
-        else:
-            state = new_state
-        na, nh = new_na, new_nh
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "delta": delta,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-
+    state, lineage, _ = supersteps.run(
+        spark,
+        vertex_ids.select("id", F.lit(1.0).alias("authority"), F.lit(1.0).alias("hub")),
+        step,
+        algorithm="hits", metric="delta", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id,
+        params={"tol": tol}, tol=tol, on_resume=restore_norms,
+    )
     adj_src.unpersist()
     adj_dst.unpersist()
-    return _normalized(state, na, nh), lineage
+    return _normalized(state, norms["norm_auth"], norms["norm_hub"]), lineage
 
 
 def _normalized(state: DataFrame, na: float, nh: float) -> DataFrame:

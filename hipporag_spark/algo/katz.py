@@ -26,11 +26,10 @@ Physical plan per superstep (identical discipline to
 - EXACTLY ONE Spark action per superstep: the per-block stats collect
   (L1 delta) that also materializes the lazily local-checkpointed new
   state;
-- ``truncate_stats`` every :data:`~..fsio.STATS_RESET_EVERY` rounds
-  bounds Catalyst's localCheckpoint-carried sizeInBytes growth;
-- supersteps checkpoint through the same
-  :class:`~..checkpointing.CheckpointManager` contract as PPR/CC/LP, so
-  a killed job resumes mid-iteration.
+- :mod:`..supersteps` runs the loop: ``truncate_stats`` every
+  :data:`~..fsio.STATS_RESET_EVERY` rounds bounds Catalyst's
+  localCheckpoint-carried sizeInBytes growth, and supersteps checkpoint
+  so a killed job resumes mid-iteration.
 
 ``tol=0.0`` forces exactly ``max_iter`` rounds (what the unrolled-CTE
 driver oracle needs — same technique as ``hits``/``ppr_docs``).
@@ -38,16 +37,11 @@ driver oracle needs — same technique as ``hits``/``ppr_docs``).
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..fsio import STATS_RESET_EVERY, truncate_stats
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def katz_centrality(
@@ -74,23 +68,7 @@ def katz_centrality(
         .persist()
     )
 
-    state = vertex_ids.select("id", F.lit(float(beta)).alias("katz"))
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            state, manifest = ckpt.load(spark, latest)
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return state, lineage
-            start = latest + 1
-    state = state.persist()
-
-    for step in range(start, max_iter):
-        t0 = time.time()
+    def step(state: DataFrame, k: int) -> Superstep:
         contrib = (
             adj.join(state, adj.src == state.id)
             .groupBy("dst")
@@ -111,51 +89,19 @@ def katz_centrality(
             # action per superstep; see components.py)
             .localCheckpoint(eager=False)
         )
-
-        stats = (
+        stats = block_stats(
             state.select("id", F.col("katz").alias("old"))
-            .join(new_state.select("id", F.col("katz").alias("new")), "id")
-            .withColumn("block", block_of(F.col("id"), P))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.abs(F.col("new") - F.col("old"))).alias("delta"),
-            )
-            .collect()
+            .join(new_state.select("id", F.col("katz").alias("new")), "id"),
+            P,
+            delta=F.sum(F.abs(F.col("new") - F.col("old"))),
         )
-        delta = float(sum(r["delta"] for r in stats))
-        wall_ms = (time.time() - t0) * 1000
-        converged = delta < tol
+        return Superstep(new_state, stats, float(sum(r["delta"] for r in stats)))
 
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=delta,
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["rows"], "delta": r["delta"]} for r in stats
-            ],
-            extra={"algorithm": "katz", "alpha": alpha, "beta": beta},
-        )
-        old = state
-        if ckpt is not None:
-            state = ckpt.write(new_state, meta)  # parquet-backed copy
-            free_local_checkpoint(new_state)
-        else:
-            state = new_state
-            if not converged and (step + 1) % STATS_RESET_EVERY == 0:
-                # bound localCheckpoint-carried sizeInBytes digit growth
-                state = truncate_stats(new_state, "hipporag_katz_state_")
-                free_local_checkpoint(new_state)
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "delta": delta,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-
+    state, lineage, _ = supersteps.run(
+        spark, vertex_ids.select("id", F.lit(float(beta)).alias("katz")), step,
+        algorithm="katz", metric="delta", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id,
+        params={"alpha": alpha, "beta": beta, "tol": tol}, tol=tol,
+    )
     adj.unpersist()
     return state, lineage

@@ -18,20 +18,16 @@ count — all keyed on vertex id, so hub skew spreads across partitions;
 no collect beyond the O(P) per-block metrics action that doubles as the
 convergence check. Rounds = peeling depth, which on power-law graphs is
 tiny (the periphery sheds in the first 2–3 rounds). Supersteps checkpoint
-through the same CheckpointManager contract as PPR/CC.
+and resume through :mod:`..supersteps`.
 """
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def k_core(
@@ -52,23 +48,7 @@ def k_core(
     P = num_blocks or spark.sparkContext.defaultParallelism
     edges = adj.select("src", "dst").persist()
 
-    active = vertex_ids.select("id")
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            active, manifest = ckpt.load(spark, latest)
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return _core_degrees(edges, active), lineage
-            start = latest + 1
-    active = active.persist()
-
-    for step in range(start, max_iter):
-        t0 = time.time()
+    def step(active: DataFrame, _: int) -> Superstep:
         live = edges.join(active, edges.src == active.id, "left_semi").join(
             active, edges.dst == active.id, "left_semi"
         )
@@ -79,47 +59,18 @@ def k_core(
 
         # metrics + convergence in the SAME action that materializes the
         # lazy checkpoint (one Spark action per round, like components.py)
-        stats = (
-            active.join(new_active.withColumn("keep", F.lit(1)), "id", "left_outer")
-            .withColumn("block", block_of(F.col("id"), P))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("keep").isNull().cast("long")).alias("removed"),
-            )
-            .collect()
+        stats = block_stats(
+            active.join(new_active.withColumn("keep", F.lit(1)), "id", "left_outer"),
+            P,
+            removed=F.sum(F.col("keep").isNull().cast("long")),
         )
-        removed = int(sum(r["removed"] for r in stats))
-        wall_ms = (time.time() - t0) * 1000
-        converged = removed == 0
+        return Superstep(new_active, stats, sum(r["removed"] for r in stats))
 
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=float(removed),
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["rows"], "removed": r["removed"]}
-                for r in stats
-            ],
-            extra={"algorithm": "k_core", "k": k},
-        )
-        old = active
-        if ckpt is not None:
-            active = ckpt.write(new_active, meta)
-            free_local_checkpoint(new_active)
-        else:
-            active = new_active
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "removed": removed,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-
+    active, lineage, _ = supersteps.run(
+        spark, vertex_ids.select("id"), step,
+        algorithm="k_core", metric="removed", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id, params={"k": k},
+    )
     core = _core_degrees(edges, active)
     edges.unpersist()
     return core, lineage

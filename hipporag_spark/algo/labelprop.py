@@ -27,16 +27,11 @@ deterministic partition primitive; score it with :mod:`.modularity`
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..fsio import STATS_RESET_EVERY, truncate_stats
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def label_propagation(
@@ -53,23 +48,7 @@ def label_propagation(
     # pre-partitioned on src: vote joins never re-exchange O(E)
     edges = adj.select("src", "dst", "weight").repartition(F.col("src")).persist()
 
-    labels = vertex_ids.select("id", F.col("id").alias("label"))
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            labels, manifest = ckpt.load(spark, latest)
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return labels, lineage
-            start = latest + 1
-    labels = labels.persist()
-
-    for step in range(start, max_iter):
-        t0 = time.time()
+    def step(labels: DataFrame, k: int) -> Superstep:
         votes = (
             edges.join(labels, edges.src == labels.id)
             .groupBy("dst", "label")
@@ -87,52 +66,18 @@ def label_propagation(
             # action per superstep; see components.py)
             .localCheckpoint(eager=False)
         )
-
-        stats = (
+        stats = block_stats(
             labels.select("id", F.col("label").alias("old"))
-            .join(new_labels.select("id", F.col("label").alias("new")), "id")
-            .withColumn("block", block_of(F.col("id"), P))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum((F.col("old") != F.col("new")).cast("long")).alias("changed"),
-            )
-            .collect()
+            .join(new_labels.select("id", F.col("label").alias("new")), "id"),
+            P,
+            changed=F.sum((F.col("old") != F.col("new")).cast("long")),
         )
-        changed = int(sum(r["changed"] for r in stats))
-        wall_ms = (time.time() - t0) * 1000
-        converged = changed == 0
+        return Superstep(new_labels, stats, sum(r["changed"] for r in stats))
 
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=float(changed),
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["rows"], "changed": r["changed"]} for r in stats
-            ],
-            extra={"algorithm": "label_propagation"},
-        )
-        old = labels
-        if ckpt is not None:
-            labels = ckpt.write(new_labels, meta)  # parquet-backed copy
-            free_local_checkpoint(new_labels)
-        else:
-            labels = new_labels
-            if not converged and (step + 1) % STATS_RESET_EVERY == 0:
-                # bound localCheckpoint-carried sizeInBytes digit growth
-                # (see fsio.truncate_stats)
-                labels = truncate_stats(new_labels, "hipporag_lp_state_")
-                free_local_checkpoint(new_labels)
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "changed": changed,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-
+    labels, lineage, _ = supersteps.run(
+        spark, vertex_ids.select("id", F.col("id").alias("label")), step,
+        algorithm="label_propagation", metric="changed", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id,
+    )
     edges.unpersist()
     return labels, lineage

@@ -22,20 +22,17 @@ skew spreads across partitions; no collect beyond the O(P) per-block
 metrics action that doubles as the convergence check. Hubs resolve in
 round 1 (a hub is either the local min or adjacent to one), so rounds
 track the id-decreasing path structure, small on real graphs. Supersteps
-checkpoint through the same CheckpointManager contract as PPR/CC.
+checkpoint and resume through :mod:`..supersteps`.
 """
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..lifecycle import free_local_checkpoint
+from .. import supersteps
 from ..graph.csr import block_of
+from ..supersteps import Superstep
 
 __all__ = ["maximal_independent_set"]
 
@@ -62,32 +59,10 @@ def maximal_independent_set(
     P = num_blocks or spark.sparkContext.defaultParallelism
     edges = adj.select("src", "dst").persist()
 
-    active = vertex_ids.select("id").distinct()
-    mis = spark.createDataFrame([], "id long, round int")
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            # checkpointed state is the union (kind=0 → mis rows with their
-            # round, kind=1 → still-active frontier) so one parquet resumes
-            # both halves mid-run
-            state, manifest = ckpt.load(spark, latest)
-            mis = state.filter(F.col("round") >= 0).select("id", "round")
-            active = state.filter(F.col("round") < 0).select("id")
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                edges.unpersist()
-                return mis, lineage
-            start = latest + 1
-    active = active.persist()
-    mis = mis.persist()
-
-    converged = False
-    for step in range(start, max_iter):
-        t0 = time.time()
+    # one state frame holds both halves: members with the round they
+    # entered (round >= 0) and the still-active frontier (round -1)
+    def step(state: DataFrame, k: int) -> Superstep:
+        active = state.filter(F.col("round") < 0).select("id")
         live = edges.join(active, edges.src == active.id, "left_semi").join(
             active, edges.dst == active.id, "left_semi"
         )
@@ -104,68 +79,39 @@ def maximal_independent_set(
             .select(F.col("dst").alias("id"))
             .distinct()
         )
-        new_active = active.join(
-            cand.unionByName(out).distinct(), "id", "left_anti"
-        ).localCheckpoint(eager=False)
-        new_mis = mis.unionByName(
-            cand.withColumn("round", F.lit(step).cast("int"))
-        ).localCheckpoint(eager=False)
-
-        # metrics + convergence in the SAME action that materializes both
-        # lazy checkpoints (one Spark action per round, like kcore.py)
+        new_active = active.join(cand.unionByName(out).distinct(), "id", "left_anti")
+        new_state = (
+            state.filter(F.col("round") >= 0)
+            .unionByName(cand.withColumn("round", F.lit(k).cast("int")))
+            .unionByName(new_active.withColumn("round", F.lit(-1).cast("int")))
+            .localCheckpoint(eager=False)
+        )
+        # metrics + convergence in the SAME action that materializes the
+        # lazy checkpoint (one Spark action per round, like kcore.py)
         stats = (
-            new_mis.select("id", F.lit(0).alias("kind"))
-            .unionByName(new_active.select("id", F.lit(1).alias("kind")))
-            .withColumn("block", block_of(F.col("id"), P))
+            new_state.withColumn("block", block_of(F.col("id"), P))
             .groupBy("block")
             .agg(
-                F.sum((F.col("kind") == 0).cast("long")).alias("in_mis"),
-                F.sum((F.col("kind") == 1).cast("long")).alias("active"),
+                F.sum((F.col("round") >= 0).cast("long")).alias("rows"),
+                F.sum((F.col("round") < 0).cast("long")).alias("active"),
             )
             .collect()
         )
-        remaining = int(sum(r["active"] for r in stats))
-        wall_ms = (time.time() - t0) * 1000
-        converged = remaining == 0
+        return Superstep(new_state, stats, sum(r["active"] for r in stats))
 
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=float(remaining),
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["in_mis"], "active": r["active"]}
-                for r in stats
-            ],
-            extra={"algorithm": "maximal_independent_set"},
-        )
-        old_active, old_mis = active, mis
-        if ckpt is not None:
-            state = new_mis.unionByName(
-                new_active.withColumn("round", F.lit(-1).cast("int"))
-            )
-            state = ckpt.write(state, meta)
-            free_local_checkpoint(new_mis)
-            free_local_checkpoint(new_active)
-            mis = state.filter(F.col("round") >= 0).select("id", "round")
-            active = state.filter(F.col("round") < 0).select("id")
-        else:
-            active, mis = new_active, new_mis
-        for df in (old_active, old_mis):
-            df.unpersist()
-            free_local_checkpoint(df)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "remaining": remaining,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-
+    init = vertex_ids.select("id").distinct().select(
+        "id", F.lit(-1).cast("int").alias("round")
+    )
+    state, lineage, converged = supersteps.run(
+        spark, init, step,
+        algorithm="maximal_independent_set", metric="remaining", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id,
+    )
     edges.unpersist()
     if not converged:
+        supersteps.release(state)
         raise RuntimeError(
             f"maximal_independent_set did not reach a fixpoint in {max_iter} "
             "rounds; result would be missing still-active vertices"
         )
-    return mis, lineage
+    return state.filter(F.col("round") >= 0).select("id", "round"), lineage

@@ -12,7 +12,7 @@ damping default 0.5 ``config_utils.py:180-183``):
              + d·Σ_u r[u]·W[u,v]/strength(u)
     stop   when Σ|r'-r| < tol   (tol 1e-6, ≤100 iters)
 
-Three physical engines, same math, chosen by where the data fits:
+Two physical engines, same math, chosen by where the data fits:
 
 - ``engine="csr"`` (default): the packed block engine
   (:mod:`..graph.blocked`). A superstep is a per-block SpMV with in-block
@@ -36,9 +36,6 @@ Three physical engines, same math, chosen by where the data fits:
   per-superstep scheduling or shuffle. Embarrassingly parallel in Q; the
   scaling-efficiency workhorse. Falls back to "csr" when a checkpoint dir
   is requested (per-superstep durability needs the superstep loop).
-- ``engine="dataframe"``: pure Catalyst plan — join + explicit salted
-  two-phase aggregation — kept as a cross-check the optimizer can reason
-  about end-to-end.
 
 For interactive SINGLE-query scoring on graphs too large to iterate over
 per query, see :mod:`.ppr_push` — approximate local PPR by synchronous
@@ -81,17 +78,6 @@ def sanitize_reset(reset_df: DataFrame) -> DataFrame:
     v = F.col("weight").cast("double")
     clean = F.when(F.isnan(v) | v.isNull() | (v < 0), F.lit(0.0)).otherwise(v)
     return reset_df.select("id", clean.alias("weight"))
-
-
-def _prep_reset(vertex_ids: DataFrame, n: int, reset_df: DataFrame | None) -> DataFrame:
-    """Normalized reset probabilities as ``(id, reset)``, Σ=1 (dataframe
-    engine). Zero / absent reset → uniform (SimpleGraph.kt:139-140)."""
-    if reset_df is not None:
-        clean = sanitize_reset(reset_df).filter(F.col("weight") > 0)
-        total = clean.agg(F.sum("weight")).collect()[0][0]
-        if total and total > 0:
-            return clean.select("id", (F.col("weight") / F.lit(float(total))).alias("reset"))
-    return vertex_ids.select("id", F.lit(1.0 / n).alias("reset"))
 
 
 def _normalize_resets(
@@ -1271,245 +1257,13 @@ def _ppr_broadcast_batch(
 
 
 # --------------------------------------------------------------------------
-# pure-Catalyst engine (engine="dataframe") — round-1 plan, kept as the
-# optimizer-visible cross-check
-# --------------------------------------------------------------------------
-
-def _ppr_dataframe_single(
-    spark, adj, strength_df, vertex_ids, n, reset_df, damping, tol, max_iter,
-    salt_buckets,
-):
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    reset = _prep_reset(vertex_ids, n, reset_df).localCheckpoint(eager=True)
-    dangling_ids = vertex_ids.join(
-        strength_df.filter(F.col("strength") > 0), "id", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_dangling = dangling_ids.count()
-    # hash-partition the static edge side on the join key and CACHE it: each
-    # superstep's join shuffles only the rank vector, never the edges
-    adj_norm = (
-        adj.join(strength_df, adj.src == strength_df.id)
-        .select("src", "dst", (F.col("weight") / F.col("strength")).alias("w_norm"))
-        .repartition(shuffle_p, "src")
-        .persist()
-    )
-    ranks = vertex_ids.select("id", F.lit(1.0 / n).alias("value")).persist()
-    dangling_mass = n_dangling / n
-    lineage: list[dict] = []
-    for step in range(max_iter):
-        t0 = time.time()
-        base = (1.0 - damping) + damping * dangling_mass
-        reset_rows = reset.select(
-            F.col("id").alias("dst"), (F.lit(base) * F.col("reset")).alias("c1")
-        ).withColumn("salt", F.lit(-1))
-        contribs = adj_norm.join(ranks, adj_norm.src == ranks.id).select(
-            "dst",
-            (F.lit(damping) * F.col("value") * F.col("w_norm")).alias("c"),
-            F.pmod(F.col("src"), F.lit(salt_buckets)).alias("salt"),
-        )
-        new_ranks = (
-            contribs.groupBy("dst", "salt")
-            .agg(F.sum("c").alias("c1"))
-            .unionByName(reset_rows)
-            .groupBy("dst")
-            .agg(F.sum("c1").alias("value"))
-            .withColumnRenamed("dst", "id")
-            .persist()
-        )
-        joined = (
-            ranks.select("id", F.col("value").alias("old"))
-            .join(new_ranks.select("id", F.col("value").alias("new")), "id", "full_outer")
-            .join(dangling_ids.select("id", F.lit(1).alias("is_dangling")), "id", "left_outer")
-        )
-        mrows = (
-            joined.withColumn("block", F.pmod(F.col("id"), F.lit(salt_buckets)).cast("int"))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(
-                    F.abs(
-                        F.coalesce(F.col("new"), F.lit(0.0))
-                        - F.coalesce(F.col("old"), F.lit(0.0))
-                    )
-                ).alias("delta"),
-                F.sum(F.coalesce(F.col("new"), F.lit(0.0))).alias("mass"),
-                F.sum(
-                    F.when(
-                        F.col("is_dangling") == 1, F.coalesce(F.col("new"), F.lit(0.0))
-                    ).otherwise(0.0)
-                ).alias("dangling_mass"),
-            )
-            .collect()
-        )
-        delta = float(sum(r["delta"] for r in mrows))
-        dangling_mass = float(sum(r["dangling_mass"] for r in mrows))
-        converged = delta < tol
-        old = ranks
-        ranks = new_ranks.localCheckpoint(eager=True)
-        new_ranks.unpersist()
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {
-                "run_id": "in-memory",
-                "superstep": step,
-                "delta": delta,
-                "converged": converged,
-                "wall_ms": (time.time() - t0) * 1000,
-                "partitions": [
-                    {"block": r["block"], "rows": r["rows"], "delta": r["delta"], "mass": r["mass"]}
-                    for r in mrows
-                ],
-            }
-        )
-        if converged:
-            break
-    free_local_checkpoint(reset)
-    free_local_checkpoint(dangling_ids)
-    adj_norm.unpersist()
-    return ranks, lineage
-
-
-def _ppr_dataframe_batch(
-    spark, adj, strength_df, vertex_ids, n, reset_df, damping, tol, max_iter,
-    check_every,
-):
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    adj_norm = (
-        adj.join(strength_df, adj.src == strength_df.id)
-        .select("src", "dst", (F.col("weight") / F.col("strength")).alias("w_norm"))
-        .repartition(shuffle_p, "src")
-        .persist()
-    )
-    reset_rows, qids, uniform_q = _normalize_resets(spark, reset_df)
-    zero_q = spark.createDataFrame([(q,) for q in sorted(uniform_q)], "query_id string")
-    reset = reset_rows.unionByName(
-        zero_q.crossJoin(vertex_ids.select("id")).select(
-            "query_id", "id", F.lit(1.0 / n).alias("reset")
-        )
-    ).localCheckpoint(eager=True)
-    dangling_ids = vertex_ids.join(
-        strength_df.filter(F.col("strength") > 0), "id", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_dangling = dangling_ids.count()
-
-    qdf = spark.createDataFrame([(q,) for q in qids], "query_id string")
-    ranks = qdf.crossJoin(vertex_ids.select("id")).select(
-        "query_id", "id", F.lit(1.0 / n).alias("value")
-    ).persist()
-    dangling_mass = {q: n_dangling / n for q in qids}
-    lineage: list[dict] = []
-    converged = False
-    for step in range(max_iter):
-        t0 = time.time()
-        base_df = spark.createDataFrame(
-            [(q, (1.0 - damping) + damping * dangling_mass[q]) for q in qids],
-            "query_id string, base double",
-        )
-        reset_rows_step = reset.join(F.broadcast(base_df), "query_id").select(
-            "query_id",
-            F.col("id").alias("dst"),
-            (F.col("base") * F.col("reset")).alias("partial"),
-        )
-        contribs = adj_norm.join(ranks, adj_norm.src == ranks.id).select(
-            "query_id",
-            "dst",
-            (F.lit(damping) * F.col("value") * F.col("w_norm")).alias("partial"),
-        )
-        new_ranks = (
-            contribs.unionByName(reset_rows_step)
-            .groupBy("query_id", "dst")
-            .agg(F.sum("partial").alias("value"))
-            .withColumnRenamed("dst", "id")
-            .persist()
-        )
-        is_check = step % check_every == check_every - 1 or step == max_iter - 1
-        if not is_check:
-            if n_dangling > 0:
-                drows = (
-                    new_ranks.join(dangling_ids, "id", "left_semi")
-                    .groupBy("query_id")
-                    .agg(F.sum("value").alias("dm"))
-                    .collect()
-                )
-                dangling_mass = {q: 0.0 for q in qids}
-                for r in drows:
-                    dangling_mass[r["query_id"]] = r["dm"]
-            old = ranks
-            ranks = new_ranks.localCheckpoint(eager=True)
-            new_ranks.unpersist()
-            old.unpersist()
-            free_local_checkpoint(old)
-            lineage.append(
-                {"run_id": "in-memory", "superstep": step, "delta": None,
-                 "converged": False, "wall_ms": (time.time() - t0) * 1000,
-                 "partitions": []}
-            )
-            continue
-        joined = (
-            ranks.select("query_id", "id", F.col("value").alias("old"))
-            .join(
-                new_ranks.select("query_id", "id", F.col("value").alias("new")),
-                ["query_id", "id"],
-                "full_outer",
-            )
-            .join(dangling_ids.select("id", F.lit(1).alias("is_dangling")), "id", "left_outer")
-        )
-        mrows = (
-            joined.withColumn("block", F.pmod(F.col("id"), F.lit(16)).cast("int"))
-            .groupBy("query_id", "block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(
-                    F.abs(
-                        F.coalesce(F.col("new"), F.lit(0.0))
-                        - F.coalesce(F.col("old"), F.lit(0.0))
-                    )
-                ).alias("delta"),
-                F.sum(
-                    F.when(
-                        F.col("is_dangling") == 1, F.coalesce(F.col("new"), F.lit(0.0))
-                    ).otherwise(0.0)
-                ).alias("dangling_mass"),
-            )
-            .collect()
-        )
-        deltas = {q: 0.0 for q in qids}
-        dangling_mass = {q: 0.0 for q in qids}
-        for r in mrows:
-            deltas[r["query_id"]] += r["delta"]
-            dangling_mass[r["query_id"]] += r["dangling_mass"]
-        delta = max(deltas.values()) if deltas else 0.0
-        converged = delta < tol
-        old = ranks
-        ranks = new_ranks.localCheckpoint(eager=True)
-        new_ranks.unpersist()
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {
-                "run_id": "in-memory",
-                "superstep": step,
-                "delta": delta,
-                "converged": converged,
-                "wall_ms": (time.time() - t0) * 1000,
-                "partitions": [
-                    {"query_id": r["query_id"], "block": r["block"], "rows": r["rows"], "delta": r["delta"]}
-                    for r in mrows
-                ],
-            }
-        )
-        if converged:
-            break
-    free_local_checkpoint(reset)
-    free_local_checkpoint(dangling_ids)
-    adj_norm.unpersist()
-    return ranks, lineage
-
-
-# --------------------------------------------------------------------------
 # public API
 # --------------------------------------------------------------------------
+
+def _check_engine(engine: str) -> None:
+    if engine not in ("csr", "broadcast"):
+        raise ValueError(f"engine must be 'csr' or 'broadcast', got {engine!r}")
+
 
 def personalized_pagerank(
     spark: SparkSession,
@@ -1526,7 +1280,6 @@ def personalized_pagerank(
     checkpoint_dir: str | None = None,
     run_id: str | None = None,
     graph: BlockGraph | None = None,
-    salt_buckets: int = 16,
     check_every: int | None = None,
 ) -> tuple[DataFrame, list[dict]]:
     """Run PPR to convergence; returns (ranks ``(id, value)``, lineage).
@@ -1540,14 +1293,10 @@ def personalized_pagerank(
     ``fsio.SPILL_KEEP - 1`` PPR runs; collect or persist results you need
     to hold across more runs than that.
     """
+    _check_engine(engine)
     n = n_vertices if n_vertices is not None else vertex_ids.count()
     if n == 0:
         return spark.createDataFrame([], "id long, value double"), []
-    if engine == "dataframe":
-        return _ppr_dataframe_single(
-            spark, adj, strength_df, vertex_ids, n, reset_df, damping, tol,
-            max_iter, salt_buckets,
-        )
     if engine == "broadcast" and checkpoint_dir is None:
         coo = collect_graph_coo(adj, strength_df, vertex_ids)
         rdf = (
@@ -1616,14 +1365,10 @@ def personalized_pagerank_batch(
     :func:`personalized_pagerank` exactly (the reference loops per query,
     ``HippoRAG.py:409-426``).
     """
+    _check_engine(engine)
     n = n_vertices if n_vertices is not None else vertex_ids.count()
     if n == 0:
         return spark.createDataFrame([], "query_id string, id long, value double"), []
-    if engine == "dataframe":
-        return _ppr_dataframe_batch(
-            spark, adj, strength_df, vertex_ids, n, reset_df, damping, tol,
-            max_iter, check_every or 1,
-        )
     if engine == "broadcast" and checkpoint_dir is None:
         coo = graph_coo
         if coo is None:

@@ -25,24 +25,19 @@ integers represented exactly in doubles. Weights are assumed
 non-negative (standard shortest-path contract; bounded ``max_iter``
 still terminates otherwise but without the settled-frontier guarantee).
 
-Supersteps checkpoint through the same CheckpointManager contract as
-PPR/CC/k-core; the checkpointed state carries the ``improved`` flag, so
+Supersteps checkpoint and resume through :mod:`..supersteps`; the
+checkpointed state carries the ``improved`` flag, so
 a killed job resumes with the TRUE frontier of its last completed round,
 not a conservative full-state restart.
 """
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..fsio import STATS_RESET_EVERY, truncate_stats
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def shortest_paths(
@@ -63,28 +58,7 @@ def shortest_paths(
     # pre-partitioned on src: frontier joins never re-exchange O(E)
     edges = adj.select("src", "dst", "weight").repartition(F.col("src")).persist()
 
-    # distinct: duplicate source ids would otherwise seed duplicate state
-    # rows that survive every full_outer superstep, breaking the
-    # documented "one row per reached vertex" contract
-    state = sources.select("id").distinct().select(
-        "id", F.lit(0.0).alias("dist"), F.lit(True).alias("improved")
-    )
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            state, manifest = ckpt.load(spark, latest)
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return state.select("id", "dist"), lineage
-            start = latest + 1
-    state = state.persist()
-
-    for step in range(start, max_iter):
-        t0 = time.time()
+    def step(state: DataFrame, k: int) -> Superstep:
         frontier = state.filter("improved").select("id", "dist")
         cand = (
             edges.join(frontier, edges.src == frontier.id)
@@ -107,52 +81,20 @@ def shortest_paths(
             )
             .localCheckpoint(eager=False)
         )
+        stats = block_stats(new_state, P, changed=F.sum(F.col("improved").cast("long")))
+        return Superstep(new_state, stats, sum(r["changed"] for r in stats))
 
-        stats = (
-            new_state.withColumn("block", block_of(F.col("id"), P))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("improved").cast("long")).alias("changed"),
-            )
-            .collect()
-        )
-        changed = int(sum(r["changed"] for r in stats))
-        wall_ms = (time.time() - t0) * 1000
-        converged = changed == 0
-
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=float(changed),
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["rows"], "changed": r["changed"]}
-                for r in stats
-            ],
-            extra={"algorithm": "shortest_paths"},
-        )
-        old = state
-        if ckpt is not None:
-            state = ckpt.write(new_state, meta)
-            free_local_checkpoint(new_state)
-        else:
-            state = new_state
-            if not converged and (step + 1) % STATS_RESET_EVERY == 0:
-                # bound localCheckpoint-carried sizeInBytes digit growth
-                # (see fsio.truncate_stats)
-                state = truncate_stats(new_state, "hipporag_sssp_state_")
-                free_local_checkpoint(new_state)
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "changed": changed,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-
+    # distinct: duplicate source ids would otherwise seed duplicate state
+    # rows that survive every full_outer superstep, breaking the
+    # documented "one row per reached vertex" contract
+    init = sources.select("id").distinct().select(
+        "id", F.lit(0.0).alias("dist"), F.lit(True).alias("improved")
+    )
+    state, lineage, _ = supersteps.run(
+        spark, init, step,
+        algorithm="shortest_paths", metric="changed", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id,
+    )
     edges.unpersist()
     return state.select("id", "dist"), lineage
 

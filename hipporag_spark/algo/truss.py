@@ -24,15 +24,11 @@ iteration caps corrupt output).
 
 from __future__ import annotations
 
-import time
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..checkpointing import CheckpointManager, SuperstepCheckpoint
-from ..lifecycle import free_local_checkpoint
-from ..graph.csr import block_of
+from .. import supersteps
+from ..supersteps import Superstep, block_stats
 
 
 def _support(edges: DataFrame) -> DataFrame:
@@ -94,83 +90,39 @@ def k_truss(
     collapsed to sorted simple pairs. Raises RuntimeError if ``max_iter``
     rounds pass without reaching the fixpoint."""
     P = num_blocks or spark.sparkContext.defaultParallelism
-    cur = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    ckpt = None
-    start = 0
-    lineage: list[dict] = []
-    if checkpoint_dir is not None:
-        ckpt = CheckpointManager(checkpoint_dir, run_id or uuid.uuid4().hex[:12])
-        latest = ckpt.latest_complete()
-        if latest is not None:
-            cur, manifest = ckpt.load(spark, latest)
-            lineage = ckpt.lineage()
-            if manifest.get("converged"):
-                return _final(cur), lineage
-            start = latest + 1
-    cur = cur.persist()
 
-    for step in range(start, max_iter):
-        t0 = time.time()
+    def step(cur: DataFrame, _: int) -> Superstep:
         sup = _support(cur)
         new_cur = (
             cur.join(sup, ["a", "b"], "left_outer")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= k - 2)
             .select("a", "b")
         ).localCheckpoint(eager=False)
+        stats = block_stats(
+            cur.join(new_cur.withColumn("keep", F.lit(1)), ["a", "b"], "left_outer"),
+            P,
+            key="a",
+            removed=F.sum(F.col("keep").isNull().cast("long")),
+        )
+        return Superstep(new_cur, stats, sum(r["removed"] for r in stats))
 
-        stats = (
-            cur.join(new_cur.withColumn("keep", F.lit(1)), ["a", "b"], "left_outer")
-            .withColumn("block", block_of(F.col("a"), P))
-            .groupBy("block")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("keep").isNull().cast("long")).alias("removed"),
-            )
-            .collect()
+    init = (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
-        removed = int(sum(r["removed"] for r in stats))
-        wall_ms = (time.time() - t0) * 1000
-        converged = removed == 0
-
-        meta = SuperstepCheckpoint(
-            run_id=ckpt.run_id if ckpt else "in-memory",
-            superstep=step,
-            delta=float(removed),
-            converged=converged,
-            wall_ms=wall_ms,
-            partitions=[
-                {"block": r["block"], "rows": r["rows"], "removed": r["removed"]}
-                for r in stats
-            ],
-            extra={"algorithm": "k_truss", "k": k},
-        )
-        old = cur
-        if ckpt is not None:
-            cur = ckpt.write(new_cur, meta)
-            free_local_checkpoint(new_cur)
-        else:
-            cur = new_cur
-        old.unpersist()
-        free_local_checkpoint(old)
-        lineage.append(
-            {"run_id": meta.run_id, "superstep": step, "removed": removed,
-             "converged": converged, "wall_ms": wall_ms, "partitions": meta.partitions}
-        )
-        if converged:
-            break
-    else:
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    cur, lineage, converged = supersteps.run(
+        spark, init, step,
+        algorithm="k_truss", metric="removed", max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, run_id=run_id, params={"k": k},
+    )
+    if not converged:
         raise RuntimeError(
             f"k_truss did not reach fixpoint within max_iter={max_iter} rounds"
         )
-
-    out = _final(cur)
-    return out, lineage
+    return _final(cur), lineage
 
 
 def _final(cur: DataFrame) -> DataFrame:

@@ -197,7 +197,7 @@ def truncate_stats(df: DataFrame, prefix: str = "hipporag_iterstate_") -> DataFr
 # supersteps between stat resets in the in-memory iterative loops: digits
 # grow ≤4× per round, so 6 rounds from a parquet leaf (~6 digits) stays
 # ≤ ~25k digits — cheap BigInt territory
-STATS_RESET_EVERY = int(os.environ.get("SPARK_GRAFT_STATS_RESET_EVERY", "6"))
+STATS_RESET_EVERY = 6
 
 
 def spill_df(df: DataFrame, prefix: str = "hipporag_spill_") -> DataFrame:

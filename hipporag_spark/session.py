@@ -86,7 +86,8 @@ def driver_memory() -> str:
 
 # RAM-backed shuffle dirs are only safe while tmpfs has real headroom: a
 # large shuffle landing in a nearly-full /dev/shm fails jobs with ENOSPC
-# instead of spilling to disk. Below this much free space, fall back to disk.
+# instead of spilling to disk. Below this much free space, fall back to disk
+# and say so in a warning.
 _SHM_MIN_FREE_BYTES = 8 << 30
 
 
@@ -96,7 +97,8 @@ def _local_dir() -> str:
         return override
     if os.path.isdir("/dev/shm"):
         st = os.statvfs("/dev/shm")
-        if st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES:
+        free = st.f_bavail * st.f_frsize
+        if free >= _SHM_MIN_FREE_BYTES:
             # per-pid subdir: concurrent sessions must not share (or
             # cross-delete) shuffle dirs; dead owners' dirs are swept like
             # the numpy spill dirs (atexit never runs on SIGKILL)
@@ -107,6 +109,13 @@ def _local_dir() -> str:
             os.makedirs(path, exist_ok=True)
             _register_spill_dir(path)  # atexit removal on clean shutdown
             return path
+        log.warning(
+            "/dev/shm has %.1f GiB free, below the %d GiB headroom for "
+            "RAM-backed shuffle dirs; spark.local.dir falls back to %s (disk)",
+            free / 2**30,
+            _SHM_MIN_FREE_BYTES >> 30,
+            tempfile.gettempdir(),
+        )
     return tempfile.gettempdir()
 
 

@@ -35,7 +35,7 @@ def spark_ranks_to_np(ranks, n):
 @pytest.mark.parametrize(
     "engine,num_blocks",
     # csr × num_blocks=1 exercises the fused single-block kernel
-    [("csr", 4), ("csr", 1), ("dataframe", 4)],
+    [("csr", 4), ("csr", 1)],
 )
 def test_ppr_random_graph_vs_reference(spark, engine, num_blocks):
     n, m, seed = 60, 300, 7

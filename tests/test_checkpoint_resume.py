@@ -502,3 +502,44 @@ def test_msf_kill_and_resume(spark, tmp_path):
     got = {(r["a"], r["b"], r["weight"]) for r in part2.collect()}
     assert got == want
     assert lin2[-1]["superstep"] == len(full_lin) - 1
+
+
+@pytest.mark.parametrize(
+    "algo,param,original,changed",
+    [("coloring", "priority", "id", "ldf"), ("kcore", "k", 2, 3), ("katz", "alpha", 0.05, 0.1)],
+)
+def test_resume_refuses_changed_parameter(spark, tmp_path, algo, param, original, changed):
+    """A killed run resumed with a different result-affecting parameter
+    raises ValueError naming it (it would otherwise mix two computations
+    in one run); resuming with only ``max_iter`` changed continues the
+    checkpointed run."""
+    from hipporag_spark.algo.coloring import greedy_coloring
+    from hipporag_spark.algo.katz import katz_centrality
+    from hipporag_spark.algo.kcore import k_core
+
+    n = 9
+    e = spark.createDataFrame(
+        [(i, i + 1, 1.0) for i in range(n - 1)], "src long, dst long, weight double"
+    )
+    adj = adjacency(e).persist()
+    vids = spark.range(n).select(F.col("id"))
+    run = {
+        "coloring": lambda **kw: greedy_coloring(spark, adj, vids, num_blocks=2, **kw),
+        "kcore": lambda **kw: k_core(spark, adj, vids, num_blocks=2, **kw),
+        "katz": lambda **kw: katz_centrality(spark, adj, vids, num_blocks=2, **kw),
+    }[algo]
+    ck = {"checkpoint_dir": str(tmp_path / algo), "run_id": "p1"}
+
+    # killed after 2 supersteps (coloring raises on exhaustion, by contract)
+    try:
+        run(max_iter=2, **{param: original}, **ck)
+    except RuntimeError:
+        pass
+    assert CheckpointManager(ck["checkpoint_dir"], "p1").latest_complete() == 1
+
+    with pytest.raises(ValueError, match=param):
+        run(max_iter=12, **{param: changed}, **ck)
+
+    _, lin = run(max_iter=12, **{param: original}, **ck)
+    assert [entry["superstep"] for entry in lin] == list(range(len(lin)))
+    assert len(lin) > 2 and "algorithm" in lin[1]  # 0-1 replayed, then fresh

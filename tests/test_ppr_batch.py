@@ -10,13 +10,22 @@ from hipporag_spark.graph.build import adjacency, strength
 from oracles import ppr_reference, random_multigraph
 
 
+def test_unknown_engine_raises():
+    """Only "csr" and "broadcast" exist; any other engine value is refused
+    before any Spark work starts."""
+    for engine in ("dataframe", "auto"):
+        with pytest.raises(ValueError, match=engine):
+            personalized_pagerank(None, None, None, None, engine=engine)
+        with pytest.raises(ValueError, match=engine):
+            personalized_pagerank_batch(None, None, None, None, None, engine=engine)
+
+
 @pytest.mark.parametrize(
     "engine,check_every,num_blocks",
     [
         ("csr", 1, 4),
         # num_blocks=1 exercises the fused single-block kernel, chained
         ("csr", 4, 1),
-        ("dataframe", 3, 4),
         ("broadcast", 1, 4),
     ],
 )

@@ -1,12 +1,17 @@
-"""Driver-heap sizing in ``session.driver_memory`` (no JVM needed).
+"""Driver-heap sizing in ``session.driver_memory`` and the shuffle-dir
+choice in ``session._local_dir`` (no JVM needed).
 
 A heap cap above the host's RAM lets the shared test JVM grow until the
 OOM killer takes it, so the default is derived from the usable memory and
-an explicit oversize value is reported.
+an explicit oversize value is reported. A full ``/dev/shm`` moves the
+shuffle dirs to disk, which is reported too.
 """
 
 import logging
+import os
+import tempfile
 
+from hipporag_spark import session
 from hipporag_spark.session import (
     _memory_string_bytes,
     driver_memory,
@@ -40,3 +45,16 @@ def test_explicit_value_above_host_memory_warns(monkeypatch, caplog):
     assert record.levelno == logging.WARNING
     assert too_big in record.getMessage()
     assert f"{usable_memory_bytes() / 2**30:.1f} GiB" in record.getMessage()
+
+
+def test_local_dir_fallback_from_full_shm_warns(monkeypatch, caplog):
+    monkeypatch.delenv("SPARK_GRAFT_LOCAL_DIR", raising=False)
+    monkeypatch.setattr(session.os.path, "isdir", lambda p: True)
+    full = os.statvfs_result((4096, 4096, 1 << 20, 100, 100, 0, 0, 0, 0, 255))
+    monkeypatch.setattr(session.os, "statvfs", lambda p: full)
+    with caplog.at_level(logging.WARNING, logger="hipporag_spark.session"):
+        assert session._local_dir() == tempfile.gettempdir()
+    [record] = caplog.records
+    assert record.levelno == logging.WARNING
+    assert "/dev/shm" in record.getMessage()
+    assert tempfile.gettempdir() in record.getMessage()
