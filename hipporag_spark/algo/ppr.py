@@ -23,12 +23,17 @@ Two physical engines, same math, chosen by where the data fits:
   chained supersteps is ONE Spark job of C+1 pandas stages: an SpMV
   stage, C-1 stages that each run block b's combine and then block b's
   next SpMV in one Python call, and a final combine stage — one Python
-  crossing per superstep, since each such stage costs ~0.4 s of fixed
-  scheduling and Arrow overhead on a 4-core host even when it does no
-  work. State is O(P) packed rows, not O(V) scalar rows: round-1
-  profiling showed the row-per-vertex formulation spent ~2.5 s/superstep
-  on scheduling + Arrow overhead and ANTI-scaled with cores. Works at any
-  graph size; per-task memory is bounded by block size.
+  crossing per superstep, since each such stage has a fixed cost on a
+  4-core host even when it does no work. Measured on a 10-stage
+  ``applyInPandas`` chain, that cost was 180-240 ms per stage, of which
+  105-200 ms per task was the Python worker re-reading the central
+  directories of pyspark.zip, the py4j zip and the spark-core jar
+  (:mod:`hipporag_spark.pyworker` removes it); the remaining 100-140 ms is
+  JVM-side scheduling and Arrow I/O. State is O(P) packed rows, not
+  O(V) scalar rows: round-1 profiling showed the row-per-vertex
+  formulation spent ~2.5 s/superstep on scheduling + Arrow overhead and
+  ANTI-scaled with cores. Works at any graph size; per-task memory is
+  bounded by block size.
 - ``engine="broadcast"`` (batch): when the graph's COO arrays fit in
   executor memory (the HippoRAG retrieval regime — millions of vertices,
   thousands of queries), broadcast the graph ONCE and partition by query:
@@ -495,12 +500,15 @@ def _ppr_blocked(
         latest = ckpt.latest_complete()
         if latest is not None:
             ranks, manifest = ckpt.load(spark, latest)
-            saved_q = manifest.get("qids")
-            if saved_q is not None and list(saved_q) != list(qids):
-                raise ValueError(
-                    f"checkpoint {ckpt.run_id} was written for queries "
-                    f"{saved_q}, resume requested {qids}"
-                )
+            # the packed rows fit only the same queries, blocks and vertex
+            # count; another damping would mix two computations in one run
+            recorded = {"qids": list(qids), "damping": damping, "num_blocks": P, "n_vertices": n}
+            for key, value in recorded.items():
+                if manifest.get(key) != value:
+                    raise ValueError(
+                        f"cannot resume run {ckpt.run_id!r}: {key}={value!r} "
+                        f"differs from the checkpointed {key}={manifest.get(key)!r}"
+                    )
             lineage = ckpt.lineage()
             if manifest.get("converged"):
                 free_local_checkpoint(runstate)

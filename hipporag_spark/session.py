@@ -14,6 +14,18 @@ puts on ``/dev/shm`` (tmpfs, charged to the same RAM). A heap cap above the
 usable memory lets G1 grow the heap until the kernel's OOM killer takes the
 JVM. ``SPARK_GRAFT_DRIVER_MEM`` overrides the default and is passed to Spark
 as given; a value larger than the usable memory is logged as a warning.
+
+Python workers start from :mod:`hipporag_spark.pyworker` as the daemon module
+(``spark.python.daemon.module``). Spark's own daemon makes every Python task
+re-read the central directories of ``pyspark.zip``, the py4j zip and the
+spark-core jar, about half the fixed cost of a pandas stage on a 4-core host;
+the package's daemon re-reads an archive only when it has changed. Spark runs
+the daemon as ``python -m`` in the driver's working directory with the
+driver's ``PYTHONPATH``, so :func:`get_spark` sets it only when one of those
+holds this package. Sessions started by ``spark-submit --py-files``
+(``scripts/run_job.py``) do not use it: there the package reaches a worker's
+``sys.path`` per task, after the daemon has started. ``extra_conf`` can
+override the setting like any other.
 """
 
 from __future__ import annotations
@@ -119,6 +131,19 @@ def _local_dir() -> str:
     return tempfile.gettempdir()
 
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _daemon_conf() -> dict[str, str]:
+    """``spark.python.daemon.module`` for :func:`get_spark`, when the daemon's
+    ``python -m`` can import this package: the working directory or a
+    ``PYTHONPATH`` entry is the package's parent."""
+    roots = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    if any(os.path.isdir(p) and os.path.samefile(p, _PACKAGE_ROOT) for p in roots):
+        return {"spark.python.daemon.module": "hipporag_spark.pyworker"}
+    return {}
+
+
 def get_spark(
     parallelism: int | None = None,
     app_name: str = "hipporag_spark",
@@ -164,7 +189,7 @@ def get_spark(
     # (graph_build 19s → 139-178s) while a same-window control without it
     # was clean — consistent with the hypervisor KSM-merging the freshly
     # zeroed heap and re-breaking the pages under load. Don't re-add it.
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

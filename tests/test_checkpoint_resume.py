@@ -543,3 +543,24 @@ def test_resume_refuses_changed_parameter(spark, tmp_path, algo, param, original
     _, lin = run(max_iter=12, **{param: original}, **ck)
     assert [entry["superstep"] for entry in lin] == list(range(len(lin)))
     assert len(lin) > 2 and "algorithm" in lin[1]  # 0-1 replayed, then fresh
+
+
+@pytest.mark.parametrize("param,original,changed", [("damping", 0.5, 0.85), ("num_blocks", 4, 2)])
+def test_ppr_resume_refuses_changed_parameter(spark, tmp_path, param, original, changed):
+    """Blocked PPR resumed with another damping (two computations in one
+    run) or block count (packed rows that do not fit the new blocks)
+    raises ValueError naming the parameter; the original values resume."""
+    n = 40
+    _, adj, st, vids = _graph(spark, n, 160, seed=23)
+    kw = {"damping": 0.5, "num_blocks": 4, "checkpoint_dir": str(tmp_path / "ck"), "run_id": "p1"}
+    run = lambda **over: personalized_pagerank(spark, adj, st, vids, n_vertices=n, **{**kw, **over})
+
+    run(max_iter=2)
+    assert CheckpointManager(kw["checkpoint_dir"], "p1").latest_complete() == 1
+
+    with pytest.raises(ValueError, match=param):
+        run(**{param: changed})
+
+    _, lin = run(**{param: original})
+    assert lin[-1]["converged"]
+    assert [entry["superstep"] for entry in lin] == list(range(len(lin)))
